@@ -4,6 +4,7 @@ import graft.Tuning
 import graft.Tables
 import graft.Tables.QueryDef
 import graft.functions.TextFunctions._
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,7 +26,7 @@ import org.apache.spark.sql.functions._
  *  - exact verification (Jaccard, cosine, hamming) runs on candidate PAIRS
  *    only, a vanishing fraction of the corpus.
  */
-object Dedup {
+object Dedup extends Logging {
 
   /** Exact dedup: hash-groupBy on md5(text). Emits one row per distinct
    *  content hash with the kept (min) doc_id and the duplicate count. */
@@ -671,12 +672,12 @@ object Dedup {
         (nextSig._1 == sig._1 && isStarFixpoint(small.df))
       sig = nextSig
       rounds += 1
-      // round-count instrumentation (r12): capacity campaigns attribute CC
-      // cost to ROUNDS × per-round volume, and until now the count was only
-      // observable by attaching a debugger. One bounded stderr line per
-      // round — edge count is free (the signature aggregate already
-      // computed it), the duration covers this round's materialize+check.
-      System.err.println(f"CC ROUND $rounds%d: ${nextSig._1}%d edges, " +
+      // round-count instrumentation: capacity campaigns attribute CC cost
+      // to ROUNDS × per-round volume. One debug line per round (enable
+      // DEBUG for graft.dedup.Dedup to see it) — edge count is free (the
+      // signature aggregate already computed it), the duration covers this
+      // round's materialize+check.
+      logDebug(f"CC ROUND $rounds%d: ${nextSig._1}%d edges, " +
         f"${(System.nanoTime() - t0) / 1e9}%.2f s${if (converged) " (fixpoint)" else ""}")
     }
     // at the star fixpoint every edge is (member, root): members label to

@@ -590,9 +590,10 @@ case class PqEncodeExpr(child: Expression, gs: Double, cb: Array[Array[Long]],
   // references array.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebook", cb, "long[][]")
-    val gsRef = java.lang.Double.toString(gs) // Double.toString round-trips exactly
+    // the exact bits, not a decimal literal: NaN/±Infinity have no Java literal
+    val gsRef = s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(gs)}L)"
     nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PqOps.encode($c, ${gsRef}d, $cbRef, $subDim, $childIsFloat);
+      ${ev.value} = graft.functions.PqOps.encode($c, $gsRef, $cbRef, $subDim, $childIsFloat);
       ${ev.isNull} = (${ev.value} == null);
     """)
   }

@@ -43,14 +43,19 @@ trait WitnessFoldAgg extends TypedImperativeAggregate[Witness] with UnaryLike[Ex
     val v = child.eval(input)
     if (v == null) buffer
     else {
-      val line = v.asInstanceOf[UTF8String].toString
-      if (line.isEmpty) buffer
-      else
-        try cap(Witness.merge(buffer, Witness.ofJson(line, inferTimestamps = inferTimestamps)))
-        catch {
-          case e: RowMismatch if e.row.isEmpty =>
-            throw e.copy(row = Some(Witness.prettyRow(line)))
-        }
+      val doc = v.asInstanceOf[UTF8String]
+      if (doc.numBytes == 0) buffer
+      else {
+        val w =
+          try Witness.foldJson(buffer, doc, inferTimestamps = inferTimestamps)
+          catch {
+            case e: RowMismatch if e.row.isEmpty =>
+              throw e.copy(row = Some(Witness.prettyRow(doc.toString)))
+          }
+        // the buffer is always capped already (cap is idempotent), so a
+        // row that widened nothing skips the re-cap walk
+        if (w eq buffer) buffer else cap(w)
+      }
     }
   }
 

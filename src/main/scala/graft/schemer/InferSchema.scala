@@ -1,8 +1,10 @@
 package graft.schemer
 
 import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Distributed execution of the schema-witness fold — the Spark-native form
@@ -22,22 +24,23 @@ object InferSchema {
    *  Seeded with the EMPTY OBJECT like the reference (`Json.obj()`,
    *  Schemer.scala:10): an empty file renders an empty column list, and a
    *  non-object top-level row fails with RowMismatch — both reference
-   *  behaviors that a WNull seed would silently change. */
-  private def foldPartition(idx: Int, it: Iterator[String]): Iterator[(Int, Witness)] = {
+   *  behaviors that a WNull seed would silently change. Rows arrive as the
+   *  scan's UTF-8 bytes; a line is decoded to a String, and its diagnostic
+   *  context built, only when the row fails. */
+  private def foldPartition(idx: Int, it: Iterator[InternalRow]): Iterator[(Int, Witness)] = {
     var rec = 0L
     var acc: Witness = WObj.empty
     while (it.hasNext) {
-      val line = it.next()
+      val doc = it.next().getUTF8String(0)
       rec += 1
-      if (line.nonEmpty) {
-        val ctx = s"partition $idx record $rec"
+      if (doc != null && doc.numBytes > 0) {
         // attach the offending document to the diagnostic at the only tier
         // that still holds the raw line (reference Schemer.scala:19)
         acc =
-          try Witness.merge(acc, Witness.ofJson(line, ctx), ctx)
+          try Witness.foldJson(acc, doc, s"partition $idx record $rec")
           catch {
             case e: RowMismatch if e.row.isEmpty =>
-              throw e.copy(row = Some(Witness.prettyRow(line)))
+              throw e.copy(row = Some(Witness.prettyRow(doc.toString)))
           }
       }
     }
@@ -58,7 +61,9 @@ object InferSchema {
    *  memory, so an 800k-split corpus collects ~800 range witnesses, not
    *  800k. One level suffices up to rangeSize² (≈1M) splits. */
   def inferWitness(ds: Dataset[String], rangeSize: Int = 1024): Witness = {
-    val parts = ds.rdd
+    // the scan's own rows (as Spark's JsonInferSchema reads a
+    // Dataset[String]): `ds.rdd` would decode every line to a String first
+    val parts = ds.queryExecution.toRdd
       .mapPartitionsWithIndex(foldPartition, preservesPartitioning = true)
     val ranged =
       if (parts.getNumPartitions <= rangeSize) parts
@@ -90,7 +95,7 @@ object InferSchema {
   class HiveTypeAggregator extends Aggregator[String, Witness, String] {
     def zero: Witness = Witness.bottom
     def reduce(b: Witness, a: String): Witness =
-      if (a == null || a.isEmpty) b else Witness.merge(b, Witness.ofJson(a))
+      if (a == null || a.isEmpty) b else Witness.foldJson(b, UTF8String.fromString(a))
     def merge(b1: Witness, b2: Witness): Witness = Witness.merge(b1, b2)
     def finish(r: Witness): String = HiveRender.renderType(r)
     def bufferEncoder: Encoder[Witness] = witnessEnc
@@ -102,7 +107,7 @@ object InferSchema {
   class ColumnDefsAggregator extends Aggregator[String, Witness, String] {
     def zero: Witness = Witness.bottom
     def reduce(b: Witness, a: String): Witness =
-      if (a == null || a.isEmpty) b else Witness.merge(b, Witness.ofJson(a))
+      if (a == null || a.isEmpty) b else Witness.foldJson(b, UTF8String.fromString(a))
     def merge(b1: Witness, b2: Witness): Witness = Witness.merge(b1, b2)
     def finish(r: Witness): String = HiveRender.definition(r)
     def bufferEncoder: Encoder[Witness] = witnessEnc

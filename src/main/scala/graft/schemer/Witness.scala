@@ -1,6 +1,8 @@
 package graft.schemer
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -56,6 +58,15 @@ final case class WArr(elem: Witness) extends Witness
 /** Object witness: fields in deterministic first-seen order. */
 final case class WObj(fields: Vector[(String, Witness)]) extends Witness {
   def get(key: String): Option[Witness] = fields.collectFirst { case (k, w) if k == key => w }
+
+  /** Key → field position for the token fold's per-key lookup; built once
+   *  per instance, and a witness a row does not widen is reused as is. */
+  @transient private[schemer] lazy val index: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](fields.size * 2)
+    var i = 0
+    while (i < fields.size) { m.put(fields(i)._1, i); i += 1 }
+    m
+  }
 }
 
 object WObj {
@@ -198,9 +209,83 @@ object Witness {
   /** Parse one NDJSON line into its witness. Malformed JSON throws
    *  (fail-fast, like the reference's `Json.parse` at Schemer.scala:13).
    *  `inferTimestamps` (default off, like the MAP flag) turns ISO-8601
-   *  strings into [[WTs]] witnesses. */
+   *  strings into [[WTs]] witnesses. The tree path: the reference form of
+   *  [[foldJson]], and the one that produces its diagnostics. */
   def ofJson(line: String, context: => String = "", inferTimestamps: Boolean = false): Witness =
     ofNode(mapper.readTree(line), context, inferTimestamps)
+
+  /** Fold one UTF-8 JSON document into `acc`: equal to
+   *  `merge(acc, ofJson(doc.toString, context, inferTimestamps), context)`,
+   *  result or exception, but parsed from the bytes as a token stream
+   *  ([[TokenFold]]) — no String decode, no tree, no row witness — and
+   *  returning `acc` itself when the document widens nothing. The rows the
+   *  token fold hands back (kind conflicts, duplicate keys, parse errors)
+   *  and documents the byte parser would read differently from the decoded
+   *  String ([[readsAsString]]) are re-derived on the tree path, which
+   *  raises the exact reference errors; `context` is evaluated only there. */
+  def foldJson(acc: Witness, doc: UTF8String, context: => String = "",
+      inferTimestamps: Boolean = false): Witness = {
+    def tree = merge(acc, ofJson(doc.toString, context, inferTimestamps), context)
+    if (!readsAsString(doc)) tree
+    else {
+      val p = doc.getBaseObject match {
+        case bytes: Array[Byte] => mapper.getFactory.createParser(
+          bytes, (doc.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, doc.numBytes)
+        case _ => mapper.getFactory.createParser(doc.getBytes)
+      }
+      try TokenFold(acc, p, inferTimestamps)
+      catch { case TokenFold.Fallback | _: java.io.IOException => tree }
+      finally p.close()
+    }
+  }
+
+  /** Whether Jackson's byte source reads `doc` exactly as the String that
+   *  `doc.toString` decodes: no NUL among the first two bytes and no
+   *  BOM-like first byte (either makes the byte source detect UTF-16/32 or
+   *  skip a BOM), and well-formed UTF-8 (the parser accepts some malformed
+   *  sequences, e.g. overlong forms, that the String decodes to U+FFFD).
+   *  ASCII runs are checked eight bytes at a time. */
+  private def readsAsString(doc: UTF8String): Boolean = {
+    val base = doc.getBaseObject
+    val off = doc.getBaseOffset
+    val n = doc.numBytes
+    def byte(i: Int): Int = Platform.getByte(base, off + i) & 0xff
+    if (n > 0 && (byte(0) == 0 || byte(0) >= 0xef)) return false
+    if (n > 1 && byte(1) == 0) return false
+    var i = 0
+    while (i < n) {
+      if (i + 8 <= n && (Platform.getLong(base, off + i) & 0x8080808080808080L) == 0) i += 8
+      else {
+        val b = byte(i)
+        if (b < 0x80) i += 1
+        else {
+          // Unicode Table 3-7: lead byte → continuation count and the range
+          // of the first continuation byte
+          var need = 0
+          var lo = 0x80
+          var hi = 0xbf
+          if (b >= 0xc2 && b <= 0xdf) need = 1
+          else if (b >= 0xe0 && b <= 0xef) {
+            need = 2
+            if (b == 0xe0) lo = 0xa0 else if (b == 0xed) hi = 0x9f
+          } else if (b >= 0xf0 && b <= 0xf4) {
+            need = 3
+            if (b == 0xf0) lo = 0x90 else if (b == 0xf4) hi = 0x8f
+          } else return false
+          if (i + need >= n) return false
+          val c = byte(i + 1)
+          if (c < lo || c > hi) return false
+          var j = 2
+          while (j <= need) {
+            if ((byte(i + j) & 0xc0) != 0x80) return false
+            j += 1
+          }
+          i += need + 1
+        }
+      }
+    }
+    true
+  }
 
   // ---- flagged ISO-8601 recognition ---------------------------------------
 

@@ -157,6 +157,39 @@ class VectorExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("PqEncodeExpr compiles under forced codegen for every gs, NaN and ±Inf included") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.ColumnBridge
+    val w = 2
+    val cb = Array(Array(0L, 0L, 0L, 0L), Array(5L, -5L, 127L, -127L), Array(-1L, 2L, -3L, 4L))
+    val vecs = Seq(Array(0.5f, -0.25f, 1f, -1f), Array(0f, 0f, 0f, 0f), Array(-3f, 2f, 0.1f, 7f))
+    val df = vecs.map(Tuple1(_)).toDF("v")
+    val conf = Map(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.wholeStage" -> "true",
+      // keep the projection out of the optimizer's interpreted local fold
+      "spark.sql.optimizer.excludedRules" -> "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      for (gs <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 0.0, -0.0, 1e-300, 3.5)) {
+        val q = df.select(ColumnBridge.column(graft.functions.PqEncodeExpr(
+          ColumnBridge.expression(col("v")), gs, cb, w)).as("codes"))
+        assert(q.queryExecution.executedPlan.toString.contains("*("), s"gs=$gs: not whole-stage compiled")
+        val got = q.collect().map(_.getSeq[Long](0)).toSeq
+        val want = vecs.map { v =>
+          val a = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v)
+          PqOps.encode(a, gs, cb, w, childIsFloat = true).toLongArray().toSeq
+        }
+        assert(got == want, s"gs=$gs")
+      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("hyperplaneSig interpreted path agrees with codegen path") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)

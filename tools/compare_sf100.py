@@ -18,8 +18,12 @@ for q in common:
     if x > 0 and y > 0:
         logs.append(math.log(x / y))
     rows.append((q, x, y, x / y if y else float("inf")))
-print(f"common {len(common)}  geomean raw speedup {math.exp(sum(logs)/len(logs)):.2f}x"
-      f"  calib-normalized {math.exp(sum(logs)/len(logs)) * (cb/ca):.2f}x")
+if logs:
+    geo = math.exp(sum(logs) / len(logs))
+    norm = f"  calib-normalized {geo * (cb/ca):.2f}x" if ca and cb else ""
+    print(f"common {len(common)}  geomean raw speedup {geo:.2f}x{norm}")
+else:
+    print(f"common {len(common)}  no query timed in both files")
 print(f"{'query':32s} {'a13':>8s} {'r12':>8s} {'raw x':>7s}")
 for q, x, y, r in rows[:40]:
     print(f"{q:32s} {x:8.1f} {y:8.1f} {r:7.2f}")
