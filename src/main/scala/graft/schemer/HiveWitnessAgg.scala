@@ -46,15 +46,11 @@ trait WitnessFoldAgg extends TypedImperativeAggregate[Witness] with UnaryLike[Ex
       val doc = v.asInstanceOf[UTF8String]
       if (doc.numBytes == 0) buffer
       else {
-        val w =
-          try Witness.foldJson(buffer, doc, inferTimestamps = inferTimestamps)
-          catch {
-            case e: RowMismatch if e.row.isEmpty =>
-              throw e.copy(row = Some(Witness.prettyRow(doc.toString)))
-          }
-        // the buffer is always capped already (cap is idempotent), so a
-        // row that widened nothing skips the re-cap walk
-        if (w eq buffer) buffer else cap(w)
+        try cap(Witness.foldJson(buffer, doc, inferTimestamps = inferTimestamps))
+        catch {
+          case e: RowMismatch if e.row.isEmpty =>
+            throw e.copy(row = Some(Witness.prettyRow(doc.toString)))
+        }
       }
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StringType
 
 /**
  * Distributed execution of the schema-witness fold — the Spark-native form
@@ -62,8 +62,12 @@ object InferSchema {
    *  800k. One level suffices up to rangeSize² (≈1M) splits. */
   def inferWitness(ds: Dataset[String], rangeSize: Int = 1024): Witness = {
     // the scan's own rows (as Spark's JsonInferSchema reads a
-    // Dataset[String]): `ds.rdd` would decode every line to a String first
-    val parts = ds.queryExecution.toRdd
+    // Dataset[String]): `ds.rdd` would decode every line to a String first.
+    // The column is cast to STRING in the plan, as the Dataset's
+    // deserializer up-casts it (a no-op the optimizer drops for a string
+    // column), so a non-string column read `.as[String]` still yields text.
+    val line = ds.col("`" + ds.columns.head.replace("`", "``") + "`")
+    val parts = ds.select(line.cast(StringType)).queryExecution.toRdd
       .mapPartitionsWithIndex(foldPartition, preservesPartitioning = true)
     val ranged =
       if (parts.getNumPartitions <= rangeSize) parts
@@ -95,7 +99,7 @@ object InferSchema {
   class HiveTypeAggregator extends Aggregator[String, Witness, String] {
     def zero: Witness = Witness.bottom
     def reduce(b: Witness, a: String): Witness =
-      if (a == null || a.isEmpty) b else Witness.foldJson(b, UTF8String.fromString(a))
+      if (a == null || a.isEmpty) b else Witness.foldJson(b, a, "", inferTimestamps = false)
     def merge(b1: Witness, b2: Witness): Witness = Witness.merge(b1, b2)
     def finish(r: Witness): String = HiveRender.renderType(r)
     def bufferEncoder: Encoder[Witness] = witnessEnc
@@ -107,7 +111,7 @@ object InferSchema {
   class ColumnDefsAggregator extends Aggregator[String, Witness, String] {
     def zero: Witness = Witness.bottom
     def reduce(b: Witness, a: String): Witness =
-      if (a == null || a.isEmpty) b else Witness.foldJson(b, UTF8String.fromString(a))
+      if (a == null || a.isEmpty) b else Witness.foldJson(b, a, "", inferTimestamps = false)
     def merge(b1: Witness, b2: Witness): Witness = Witness.merge(b1, b2)
     def finish(r: Witness): String = HiveRender.definition(r)
     def bufferEncoder: Encoder[Witness] = witnessEnc

@@ -1,5 +1,6 @@
 package graft.schemer
 
+import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -180,12 +181,16 @@ object Witness {
    *  distinct keys (one per user) folds to a single value witness instead
    *  of a million-field struct that would grow the shuffled buffer without
    *  limit. Idempotent, and associative with [[merge]] (the WMap merge
-   *  cases), so partials that collapsed at different times agree. */
+   *  cases), so partials that collapsed at different times agree. The
+   *  union of a collapsed object's values is capped in the same pass: a
+   *  data-keyed object nested in another unions into a wide object only
+   *  there, and leaving it for the next pass would make the result depend
+   *  on how many updates and merges a group saw. */
   def capObjects(w: Witness, threshold: Int): Witness = w match {
     case WObj(fs) =>
       val capped = fs.map { case (k, v) => k -> capObjects(v, threshold) }
       if (threshold > 0 && capped.size > threshold) {
-        try WMap(capped.iterator.map(_._2).foldLeft(bottom)(merge(_, _)))
+        try WMap(capObjects(capped.iterator.map(_._2).foldLeft(bottom)(merge(_, _)), threshold))
         catch { case _: RowMismatch => WObj(capped) }
       } else WObj(capped)
     case WArr(e) => WArr(capObjects(e, threshold))
@@ -227,17 +232,24 @@ object Witness {
       inferTimestamps: Boolean = false): Witness = {
     def tree = merge(acc, ofJson(doc.toString, context, inferTimestamps), context)
     if (!readsAsString(doc)) tree
-    else {
-      val p = doc.getBaseObject match {
-        case bytes: Array[Byte] => mapper.getFactory.createParser(
-          bytes, (doc.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, doc.numBytes)
-        case _ => mapper.getFactory.createParser(doc.getBytes)
-      }
-      try TokenFold(acc, p, inferTimestamps)
-      catch { case TokenFold.Fallback | _: java.io.IOException => tree }
-      finally p.close()
-    }
+    else foldTokens(acc, doc.getBaseObject match {
+      case bytes: Array[Byte] => mapper.getFactory.createParser(
+        bytes, (doc.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, doc.numBytes)
+      case _ => mapper.getFactory.createParser(doc.getBytes)
+    }, tree, inferTimestamps)
   }
+
+  /** [[foldJson]] over a line already decoded to a String (the typed
+   *  Aggregators' input). The char parser reads it exactly as `ofJson`
+   *  does, so no byte check applies. */
+  def foldJson(acc: Witness, line: String, context: => String, inferTimestamps: Boolean): Witness =
+    foldTokens(acc, mapper.getFactory.createParser(line),
+      merge(acc, ofJson(line, context, inferTimestamps), context), inferTimestamps)
+
+  private def foldTokens(acc: Witness, p: JsonParser, tree: => Witness, ts: Boolean): Witness =
+    try TokenFold(acc, p, ts)
+    catch { case TokenFold.Fallback | _: java.io.IOException => tree }
+    finally p.close()
 
   /** Whether Jackson's byte source reads `doc` exactly as the String that
    *  `doc.toString` decodes: no NUL among the first two bytes and no

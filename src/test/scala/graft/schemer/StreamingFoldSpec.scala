@@ -46,6 +46,8 @@ class StreamingFoldSpec extends AnyFunSuite {
     val expected = tree(acc, line, ts)
     val actual = stream(acc, line.getBytes(UTF_8), ts)
     assert(same(expected, actual), s"\n  acc:  $acc\n  line: $line\n  tree: $expected\n  fold: $actual")
+    val decoded = outcome(Witness.foldJson(acc, line, "ctx", ts))
+    assert(same(expected, decoded), s"\n  acc:  $acc\n  line: $line\n  tree: $expected\n  fold(String): $decoded")
     expected.getOrElse(acc)
   }
 
@@ -233,5 +235,52 @@ class StreamingFoldSpec extends AnyFunSuite {
       inferTimestamps = true) eq acc)
     assert(Witness.foldJson(acc, UTF8String.fromString("""{"t":"2024-01-02"}"""), inferTimestamps = true) eq acc)
     assert(Witness.foldJson(acc, UTF8String.fromString("   ")) eq acc)
+  }
+
+  // ---- the fold sites ----------------------------------------------------------
+
+  /** Ten data keys, each holding five data keys, each holding five data
+   *  keys of numbers: three nested levels of key-as-data objects. */
+  private val nestedDataKeys = (0 until 10).map { i =>
+    s""""k$i":""" + (0 until 5).map { j =>
+      s""""a${i}_$j":""" + (0 until 5).map(l => s""""b${i}_${j}_$l":1""").mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+  }.mkString("{", ",", "}")
+
+  private val fullyCollapsed = WMap(WMap(WMap(num)))
+
+  test("capObjects collapses nested data-keyed objects in one pass, idempotently") {
+    val once = Witness.capObjects(Witness.ofJson(nestedDataKeys), 8)
+    assert(once == fullyCollapsed)
+    assert(Witness.capObjects(once, 8) == once)
+  }
+
+  test("a mapped aggregate renders the same type however many times a group is capped") {
+    val spark = graft.SparkTestSession.spark
+    import spark.implicits._
+    val expected = HiveRender.renderType(fullyCollapsed)
+    for (rows <- 1 to 3; parts <- 1 to 2) {
+      val docs = Seq.fill(rows)(nestedDataKeys).toDF("j").repartition(parts)
+      val got = docs.agg(InferSchema.infer_hive_type_mapped($"j", 8)).first().getString(0)
+      assert(got == expected, s"$rows rows in $parts partitions")
+    }
+  }
+
+  test("inferWitness reads a non-string column through .as[String] as its text") {
+    val spark = graft.SparkTestSession.spark
+    import spark.implicits._
+    // the single column is read by position, whatever its name
+    val named = Seq("""{"a":1}""").toDF("x.y`z").as[String]
+    assert(InferSchema.inferWitness(named) == WObj(Vector("a" -> num)))
+    // a BIGINT up-casts to its decimal text: the document `7`, which is
+    // not an object and so fails against the empty-object seed
+    val e = intercept[org.apache.spark.SparkException] {
+      InferSchema.inferWitness(Seq(7L).toDF("n").as[String])
+    }
+    var c: Throwable = e
+    while (c != null && !c.isInstanceOf[RowMismatch]) c = c.getCause
+    assert(c != null, e.toString)
+    val m = c.asInstanceOf[RowMismatch]
+    assert(m.row.contains("7") && m.b == WNum(BigDecimal(7), BigDecimal(7), 0), m.getMessage)
   }
 }
