@@ -182,15 +182,7 @@ object SchemerQueries {
         .select(to_json(struct(col("event_id"), col("event_type"), col("user_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))).as("value"))
         .write.mode("overwrite").text(out)
-      val p = java.nio.file.Paths.get(out)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(f =>
-              try java.nio.file.Files.deleteIfExists(f) catch { case _: Throwable => () })
-        } catch { case _: Throwable => () }
-      }))
+      graft.ScratchFiles.deleteOnExit(java.nio.file.Paths.get(out))
       out
     })
     val witness = InferSchema.inferPath(spark, path)

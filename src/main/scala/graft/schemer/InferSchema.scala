@@ -1,5 +1,6 @@
 package graft.schemer
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Aggregator
@@ -61,14 +62,7 @@ object InferSchema {
    *  memory, so an 800k-split corpus collects ~800 range witnesses, not
    *  800k. One level suffices up to rangeSize² (≈1M) splits. */
   def inferWitness(ds: Dataset[String], rangeSize: Int = 1024): Witness = {
-    // the scan's own rows (as Spark's JsonInferSchema reads a
-    // Dataset[String]): `ds.rdd` would decode every line to a String first.
-    // The column is cast to STRING in the plan, as the Dataset's
-    // deserializer up-casts it (a no-op the optimizer drops for a string
-    // column), so a non-string column read `.as[String]` still yields text.
-    val line = ds.col("`" + ds.columns.head.replace("`", "``") + "`")
-    val parts = ds.select(line.cast(StringType)).queryExecution.toRdd
-      .mapPartitionsWithIndex(foldPartition, preservesPartitioning = true)
+    val parts = lines(ds).mapPartitionsWithIndex(foldPartition, preservesPartitioning = true)
     val ranged =
       if (parts.getNumPartitions <= rangeSize) parts
       else parts
@@ -80,6 +74,17 @@ object InferSchema {
         }
     ranged.collect().sortBy(_._1).iterator.map(_._2)
       .foldLeft(WObj.empty: Witness)(Witness.merge(_, _, "final reduce"))
+  }
+
+  /** The rows [[inferWitness]] folds: the scan's own rows, one UTF-8 line
+   *  each (as Spark's JsonInferSchema reads a Dataset[String]); `ds.rdd`
+   *  would decode every line to a String first. The column is cast to
+   *  STRING in the plan, as the Dataset's deserializer up-casts it (a no-op
+   *  the optimizer drops for a string column), so a non-string column read
+   *  `.as[String]` still yields text. */
+  private[graft] def lines(ds: Dataset[String]): RDD[InternalRow] = {
+    val line = ds.col("`" + ds.columns.head.replace("`", "``") + "`")
+    ds.select(line.cast(StringType)).queryExecution.toRdd
   }
 
   /** Infer from an NDJSON file/directory path (reference O1: file scan). */

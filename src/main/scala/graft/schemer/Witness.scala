@@ -1,6 +1,5 @@
 package graft.schemer
 
-import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -50,6 +49,19 @@ final case class WNum(min: BigDecimal, max: BigDecimal, maxScale: Int) extends W
     if (x.scale >= maxScale) x else x.setScale(maxScale)
   /** Rendered precision: max magnitude precision after widening. */
   def precision: Int = math.max(minW.precision, maxW.precision)
+
+  /** min and max unscaled, for the scan's allocation-free compare: built on
+   *  first use, or handed over by the scan that built this witness. */
+  @transient private[this] var unscaledBounds: Unscaled = _
+  private[schemer] def unscaled: Unscaled = {
+    var u = unscaledBounds
+    if (u == null) {
+      u = new Unscaled(WitnessScan.compact(min), WitnessScan.compact(max))
+      unscaledBounds = u
+    }
+    u
+  }
+  private[schemer] def withUnscaled(u: Unscaled): WNum = { unscaledBounds = u; this }
 }
 
 /** Array witness: a single merged element witness. An empty array is
@@ -60,14 +72,19 @@ final case class WArr(elem: Witness) extends Witness
 final case class WObj(fields: Vector[(String, Witness)]) extends Witness {
   def get(key: String): Option[Witness] = fields.collectFirst { case (k, w) if k == key => w }
 
-  /** Key → field position for the token fold's per-key lookup; built once
-   *  per instance, and a witness a row does not widen is reused as is. */
-  @transient private[schemer] lazy val index: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](fields.size * 2)
-    var i = 0
-    while (i < fields.size) { m.put(fields(i)._1, i); i += 1 }
-    m
+  /** Field names as UTF-8 bytes for the scan's per-key lookup: built on
+   *  first use, or handed over by the scan when a row changes only values.
+   *  A witness a row does not widen is reused as is. */
+  @transient private[this] var keyTable: KeyTable = _
+  private[schemer] def keys: KeyTable = {
+    var k = keyTable
+    if (k == null) {
+      k = new KeyTable(fields)
+      keyTable = k
+    }
+    k
   }
+  private[schemer] def withKeys(k: KeyTable): WObj = { keyTable = k; this }
 }
 
 object WObj {
@@ -201,8 +218,9 @@ object Witness {
   // ---- JSON row → witness -------------------------------------------------
 
   /** Jackson, configured so fractional literals become BigDecimal — play-json
-   *  semantics; without it `12345678901234.5` loses its p16 witness. */
-  @transient private lazy val mapper: ObjectMapper =
+   *  semantics; without it `12345678901234.5` loses its p16 witness. The
+   *  tree path's parser; the scan reads its `StreamReadConstraints`. */
+  @transient private[schemer] lazy val mapper: ObjectMapper =
     new ObjectMapper().configure(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS, true)
 
   /** Pretty-print a raw NDJSON line for diagnostics (reference prints the
@@ -221,82 +239,28 @@ object Witness {
 
   /** Fold one UTF-8 JSON document into `acc`: equal to
    *  `merge(acc, ofJson(doc.toString, context, inferTimestamps), context)`,
-   *  result or exception, but parsed from the bytes as a token stream
-   *  ([[TokenFold]]) — no String decode, no tree, no row witness — and
-   *  returning `acc` itself when the document widens nothing. The rows the
-   *  token fold hands back (kind conflicts, duplicate keys, parse errors)
-   *  and documents the byte parser would read differently from the decoded
-   *  String ([[readsAsString]]) are re-derived on the tree path, which
-   *  raises the exact reference errors; `context` is evaluated only there. */
+   *  result or exception, but scanned from the bytes in place
+   *  ([[WitnessScan]]) — no parser, no String decode, no tree, no row
+   *  witness — and returning `acc` itself when the document widens nothing.
+   *  The rows the scan hands back (kind conflicts, duplicate keys, syntax
+   *  errors, anything outside its strict subset) are re-derived on the tree
+   *  path, which raises the exact reference errors; `context` is evaluated
+   *  only there. */
   def foldJson(acc: Witness, doc: UTF8String, context: => String = "",
-      inferTimestamps: Boolean = false): Witness = {
-    def tree = merge(acc, ofJson(doc.toString, context, inferTimestamps), context)
-    if (!readsAsString(doc)) tree
-    else foldTokens(acc, doc.getBaseObject match {
-      case bytes: Array[Byte] => mapper.getFactory.createParser(
-        bytes, (doc.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, doc.numBytes)
-      case _ => mapper.getFactory.createParser(doc.getBytes)
-    }, tree, inferTimestamps)
-  }
+      inferTimestamps: Boolean = false): Witness =
+    try WitnessScan(acc, doc.getBaseObject, doc.getBaseOffset, doc.numBytes, inferTimestamps)
+    catch { case WitnessScan.Fallback => merge(acc, ofJson(doc.toString, context, inferTimestamps), context) }
 
   /** [[foldJson]] over a line already decoded to a String (the typed
-   *  Aggregators' input). The char parser reads it exactly as `ofJson`
-   *  does, so no byte check applies. */
-  def foldJson(acc: Witness, line: String, context: => String, inferTimestamps: Boolean): Witness =
-    foldTokens(acc, mapper.getFactory.createParser(line),
-      merge(acc, ofJson(line, context, inferTimestamps), context), inferTimestamps)
-
-  private def foldTokens(acc: Witness, p: JsonParser, tree: => Witness, ts: Boolean): Witness =
-    try TokenFold(acc, p, ts)
-    catch { case TokenFold.Fallback | _: java.io.IOException => tree }
-    finally p.close()
-
-  /** Whether Jackson's byte source reads `doc` exactly as the String that
-   *  `doc.toString` decodes: no NUL among the first two bytes and no
-   *  BOM-like first byte (either makes the byte source detect UTF-16/32 or
-   *  skip a BOM), and well-formed UTF-8 (the parser accepts some malformed
-   *  sequences, e.g. overlong forms, that the String decodes to U+FFFD).
-   *  ASCII runs are checked eight bytes at a time. */
-  private def readsAsString(doc: UTF8String): Boolean = {
-    val base = doc.getBaseObject
-    val off = doc.getBaseOffset
-    val n = doc.numBytes
-    def byte(i: Int): Int = Platform.getByte(base, off + i) & 0xff
-    if (n > 0 && (byte(0) == 0 || byte(0) >= 0xef)) return false
-    if (n > 1 && byte(1) == 0) return false
-    var i = 0
-    while (i < n) {
-      if (i + 8 <= n && (Platform.getLong(base, off + i) & 0x8080808080808080L) == 0) i += 8
-      else {
-        val b = byte(i)
-        if (b < 0x80) i += 1
-        else {
-          // Unicode Table 3-7: lead byte → continuation count and the range
-          // of the first continuation byte
-          var need = 0
-          var lo = 0x80
-          var hi = 0xbf
-          if (b >= 0xc2 && b <= 0xdf) need = 1
-          else if (b >= 0xe0 && b <= 0xef) {
-            need = 2
-            if (b == 0xe0) lo = 0xa0 else if (b == 0xed) hi = 0x9f
-          } else if (b >= 0xf0 && b <= 0xf4) {
-            need = 3
-            if (b == 0xf0) lo = 0x90 else if (b == 0xf4) hi = 0x8f
-          } else return false
-          if (i + need >= n) return false
-          val c = byte(i + 1)
-          if (c < lo || c > hi) return false
-          var j = 2
-          while (j <= need) {
-            if ((byte(i + j) & 0xc0) != 0x80) return false
-            j += 1
-          }
-          i += need + 1
-        }
-      }
-    }
-    true
+   *  Aggregators' input): encoded once and scanned; a line holding an
+   *  unpaired surrogate has no UTF-8 form and goes to the tree path, which
+   *  also takes the original String on every other fallback. */
+  def foldJson(acc: Witness, line: String, context: => String, inferTimestamps: Boolean): Witness = {
+    def tree = merge(acc, ofJson(line, context, inferTimestamps), context)
+    val bytes = WitnessScan.utf8(line)
+    if (bytes == null) tree
+    else try WitnessScan(acc, bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, inferTimestamps)
+    catch { case WitnessScan.Fallback => tree }
   }
 
   // ---- flagged ISO-8601 recognition ---------------------------------------

@@ -1,9 +1,11 @@
 package graft.sources
 
-import graft.Tables
+import graft.{ScratchFiles, Tables}
 import graft.Tables.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.util.control.NonFatal
 
 /**
  * Sink-side layout operators: partitioned parquet writes and the
@@ -21,15 +23,7 @@ object Sinks {
    *  tracked so [[cleanup]] can drop them with their backing files. */
   private val registeredTables = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def rmrf(path: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(f =>
-            try java.nio.file.Files.deleteIfExists(f) catch { case _: Throwable => () })
-    } catch { case _: Throwable => () }
+  private def rmrf(path: String): Unit = ScratchFiles.deleteRecursively(java.nio.file.Paths.get(path))
 
   /** First-writer-wins write memo that HEALS ON FAILURE: a write that
    *  throws (ENOSPC mid-campaign is the measured case — sf100 attempt 12
@@ -51,7 +45,7 @@ object Sinks {
   def cleanup(spark: SparkSession): Unit = {
     import scala.jdk.CollectionConverters._
     registeredTables.iterator().asScala.toVector.foreach { t =>
-      try spark.sql(s"DROP TABLE IF EXISTS `$t`") catch { case _: Throwable => () }
+      try spark.sql(s"DROP TABLE IF EXISTS `$t`") catch { case NonFatal(_) => () }
     }
     registeredTables.clear()
     written.iterator().asScala.toVector.foreach(rmrf)
@@ -120,7 +114,7 @@ object Sinks {
       try {
         spark.sql(s"DROP TABLE IF EXISTS `$tOrders`")
         spark.sql(s"DROP TABLE IF EXISTS `$tLine`")
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       // repartition on the bucket key first: ONE file per bucket, which is
       // the layout Spark trusts to elide the merge-join sort (with several
       // files per bucket only per-file order is known and it re-sorts)

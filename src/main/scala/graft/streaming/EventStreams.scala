@@ -157,13 +157,7 @@ object EventStreams {
    *  app runs would accumulate them in the system temp dir. */
   private def tempDirWithCleanup(prefix: String): java.nio.file.Path = {
     val p = Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(f => try Files.deleteIfExists(f) catch { case _: Throwable => () })
-      } catch { case _: Throwable => () }
-    }))
+    graft.ScratchFiles.deleteOnExit(p)
     p
   }
 

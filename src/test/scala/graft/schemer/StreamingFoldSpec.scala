@@ -7,19 +7,26 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Differential property: the token-stream fold equals the tree path,
+/** Differential property: the byte scan equals the tree path,
  *  `foldJson(acc, line) ≡ merge(acc, ofJson(line))` — the same witness
  *  (compared with scales, not only by value) or the same exception class
  *  and message — on generated nested documents and on the edge cases the
- *  token fold handles differently from a tree (number normalization,
- *  duplicate keys, intra- vs cross-row conflicts, inputs that are not one
- *  clean value). A row that widens nothing returns the accumulator itself. */
+ *  scan handles differently from a tree (number normalization, duplicate
+ *  keys, intra- vs cross-row conflicts, inputs that are not one clean
+ *  value, the parser's limits), and on byte mutations of generated
+ *  documents. A row that widens nothing returns the accumulator itself. */
 class StreamingFoldSpec extends AnyFunSuite {
 
   private type Outcome = Either[(Class[_], String), Witness]
 
+  /** The message of a `RowMismatch` renders both witnesses, which itself
+   *  throws for a number whose scale cannot be widened (`1e-999999999`
+   *  against an integer); that failure is compared like a message. */
   private def outcome(f: => Witness): Outcome =
-    try Right(f) catch { case e: Exception => Left(e.getClass -> e.getMessage) }
+    try Right(f) catch {
+      case e: Exception =>
+        Left(e.getClass -> (try e.getMessage catch { case m: ArithmeticException => s"message: $m" }))
+    }
 
   private def tree(acc: Witness, line: String, ts: Boolean): Outcome =
     outcome(Witness.merge(acc, Witness.ofJson(line, "ctx", ts), "ctx"))
@@ -34,20 +41,34 @@ class StreamingFoldSpec extends AnyFunSuite {
   private def stream(acc: Witness, bytes: Array[Byte], ts: Boolean): Outcome =
     outcome(Witness.foldJson(acc, utf8(bytes), "ctx", ts))
 
-  /** Witness equality including BigDecimal scales (`==` on BigDecimal
-   *  ignores them; the case-class rendering does not). */
-  private def same(a: Outcome, b: Outcome): Boolean = (a, b) match {
-    case (Right(x), Right(y)) => x == y && x.toString == y.toString
+  /** Witness equality including BigDecimal scales (`==` on a Scala
+   *  BigDecimal ignores them; Java's `equals` does not). */
+  private def exact(a: Witness, b: Witness): Boolean = (a, b) match {
+    case (WNum(a1, a2, s), WNum(b1, b2, t)) => s == t && a1.bigDecimal == b1.bigDecimal && a2.bigDecimal == b2.bigDecimal
+    case (WArr(x), WArr(y)) => exact(x, y)
+    case (WMap(x), WMap(y)) => exact(x, y)
+    case (WObj(xs), WObj(ys)) =>
+      xs.size == ys.size && xs.zip(ys).forall { case ((k, x), (l, y)) => k == l && exact(x, y) }
     case _ => a == b
   }
+
+  private def same(a: Outcome, b: Outcome): Boolean = (a, b) match {
+    case (Right(x), Right(y)) => exact(x, y)
+    case _ => a == b
+  }
+
+  /** A failure's clue: the rendering of a witness a thousand levels deep
+   *  does not fit on the stack. */
+  private def brief(x: Any): String =
+    try x.toString.take(2000) catch { case _: StackOverflowError => "(too deep to print)" }
 
   /** Check one step and return the reference's next accumulator. */
   private def check(acc: Witness, line: String, ts: Boolean = false): Witness = {
     val expected = tree(acc, line, ts)
     val actual = stream(acc, line.getBytes(UTF_8), ts)
-    assert(same(expected, actual), s"\n  acc:  $acc\n  line: $line\n  tree: $expected\n  fold: $actual")
+    assert(same(expected, actual), s"\n  acc:  ${brief(acc)}\n  line: ${brief(line)}\n  tree: ${brief(expected)}\n  fold: ${brief(actual)}")
     val decoded = outcome(Witness.foldJson(acc, line, "ctx", ts))
-    assert(same(expected, decoded), s"\n  acc:  $acc\n  line: $line\n  tree: $expected\n  fold(String): $decoded")
+    assert(same(expected, decoded), s"\n  acc:  ${brief(acc)}\n  line: ${brief(line)}\n  tree: ${brief(expected)}\n  fold(String): ${brief(decoded)}")
     expected.getOrElse(acc)
   }
 
@@ -77,9 +98,11 @@ class StreamingFoldSpec extends AnyFunSuite {
     checkAll(WObj.empty, """{"a":1,"b":2,"a":"x"}""", """{"a":1,"a":2.5}""", """{"a":"xxxxx","a":"y"}""",
       """{"o":{"k":1,"k":{"z":true}}}""", """{"l":[{"a":1,"a":null}]}""")
     val acc = check(WObj.empty, """{"a":1,"b":"xy"}""")
-    checkAll(acc, """{"b":"q","a":2,"b":"longer"}""", """{"a":1,"a":2.5}""", """{"c":1,"c":true}""")
+    // a known key whose first value widens and whose last does not
+    checkAll(acc, """{"b":"q","a":2,"b":"longer"}""", """{"a":1,"a":2.5}""", """{"c":1,"c":true}""",
+      """{"a":-5,"a":1}""", """{"b":"longer","b":"q"}""")
     val wide = check(WObj.empty, (0 until 80).map(i => s""""k$i":$i""").mkString("{", ",", "}"))
-    checkAll(wide, """{"k70":1,"k3":2,"k70":3}""", """{"k70":1,"k3":"x","k71":3}""")
+    checkAll(wide, """{"k70":1,"k3":2,"k70":3}""", """{"k70":1,"k3":"x","k71":3}""", """{"k70":-1,"k70":70}""")
   }
 
   test("multi-byte and surrogate-pair strings count UTF-16 units") {
@@ -119,7 +142,7 @@ class StreamingFoldSpec extends AnyFunSuite {
         Array(0xff, 0xfe, 0x31, 0x00)).map(_.map(_.toByte))) {
       for (acc <- Seq(WNull, WObj.empty)) {
         val expected = tree(acc, new String(bytes, UTF_8), ts = false)
-        assert(same(expected, stream(acc, bytes, ts = false)), s"bytes ${bytes.mkString(",")}: $expected")
+        assert(same(expected, stream(acc, bytes, ts = false)), s"bytes ${bytes.mkString(",")}: ${brief(expected)}")
       }
     }
   }
@@ -130,7 +153,7 @@ class StreamingFoldSpec extends AnyFunSuite {
     for (b <- bad; acc <- Seq(WObj.empty, check(WObj.empty, """{"s":"abcdefghij"}"""))) {
       val bytes = """{"s":"a""".getBytes(UTF_8) ++ b ++ """b"}""".getBytes(UTF_8)
       val expected = tree(acc, new String(bytes, UTF_8), ts = false)
-      assert(same(expected, stream(acc, bytes, ts = false)), s"bytes ${b.mkString(",")}: $expected")
+      assert(same(expected, stream(acc, bytes, ts = false)), s"bytes ${b.mkString(",")}: ${brief(expected)}")
     }
   }
 
@@ -140,6 +163,12 @@ class StreamingFoldSpec extends AnyFunSuite {
         """{"t":"2024-02-31"}""", """{"t":"2024-01-01 10:20:30.123+02:00"}""", """{"u":"2024-13-01"}""",
         """{"t":"x"}""", """{"t":"2024-01-01"}""", """{"v":["2024-01-01","2024-01-02T00:00:00"]}"""))
       acc = check(acc, l, ts = true)
+    // escapes in a string of a temporal length are decoded before the check
+    for (l <- Seq(s"""{"t":"2024-01-0${esc("0031")}"}""", s"""{"t":"2024-01-01T10:20:30${esc("005a")}"}""",
+        """{"t":"2024\/01\/01"}""", """{"t":"abcdefghi\n"}""", s"""{"t":"${esc("0032")}024-02-31"}""")) {
+      check(WObj.empty, l, ts = true)
+      acc = check(acc, l, ts = true)
+    }
     // a WTs accumulator met with the flag off demotes to VARCHAR
     val tsAcc = check(WObj.empty, """{"t":"2024-01-01"}""", ts = true)
     checkAll(tsAcc, """{"t":"2024-01-02"}""", """{"t":"abc"}""", """{"t":"a much longer string"}""")
@@ -207,6 +236,151 @@ class StreamingFoldSpec extends AnyFunSuite {
     samples(docs, 200).zipWithIndex.foreach { case (seq, i) =>
       val ts = i % 3 == 0
       seq.foldLeft(WObj.empty: Witness)((acc, line) => check(acc, line, ts))
+    }
+  }
+
+  /** Bytes a mutation draws from: structure, number syntax, escapes, hex
+   *  digits, control bytes, and UTF-8 lead bytes that start overlong,
+   *  surrogate, 4-byte, out-of-range or impossible sequences. */
+  private val mutationBytes: IndexedSeq[Byte] =
+    ("{}[]:,\" ".map(_.toInt) ++ "0123456789.eE+-".map(_.toInt) ++ "\\uabcdefABCDEF".map(_.toInt) ++
+      Seq(0x00, 0x01, 0x08, 0x09, 0x0a, 0x0d, 0x1f, 0x7f) ++ Seq(0xc0, 0xe0, 0xed, 0xf0, 0xf4, 0xff, 0x80, 0xbf))
+      .map(_.toByte).toIndexedSeq
+
+  /** One or two single-byte edits: insert, delete or replace. Half of them
+   *  land on a byte of a multi-byte character or an escape, where the
+   *  scan's validation sits. */
+  private def mutate(doc: Array[Byte], rnd: scala.util.Random): Array[Byte] =
+    (1 to 1 + rnd.nextInt(2)).foldLeft(doc) { (d, _) =>
+      val marked = d.indices.filter(j => d(j) < 0 || d(j) == '\\')
+      val i = if (marked.nonEmpty && rnd.nextBoolean()) marked(rnd.nextInt(marked.size)) else rnd.nextInt(d.length + 1)
+      val b = mutationBytes(rnd.nextInt(mutationBytes.size))
+      rnd.nextInt(3) match {
+        case 0 => d.take(i) ++ Array(b) ++ d.drop(i)
+        case 1 if i < d.length => d.take(i) ++ d.drop(i + 1)
+        case _ if i < d.length => d.updated(i, b)
+        case _ => d :+ b
+      }
+    }
+
+  test("byte mutations of generated documents: scan ≡ tree, both overloads") {
+    val rnd = new scala.util.Random(11)
+    var checked = 0
+    samples(Gen.listOfN(20, genObject(3)), 120).zipWithIndex.foreach { case (seq, i) =>
+      val ts = i % 4 == 0
+      seq.foldLeft(if (i % 5 == 0) WNull else WObj.empty: Witness) { (running, line) =>
+        // against the running witness, and against the empty object, where
+        // every string length and number of the document shows
+        for (_ <- 0 until 3; acc <- Seq(running, WObj.empty)) {
+          val bytes = mutate(line.getBytes(UTF_8), rnd)
+          val decoded = new String(bytes, UTF_8)
+          val expected = tree(acc, decoded, ts)
+          val scanned = stream(acc, bytes, ts)
+          assert(same(expected, scanned),
+            s"\n  acc:   ${brief(acc)}\n  bytes: ${bytes.map(b => f"${b & 0xff}%02x").mkString(" ")}\n  tree:  ${brief(expected)}\n  scan:  ${brief(scanned)}")
+          val fromString = outcome(Witness.foldJson(acc, decoded, "ctx", ts))
+          assert(same(expected, fromString), s"\n  acc:  ${brief(acc)}\n  line: ${brief(decoded)}\n  tree: ${brief(expected)}\n  scan(String): ${brief(fromString)}")
+          checked += 1
+        }
+        tree(running, line, ts).getOrElse(running)
+      }
+    }
+    assert(checked >= 100 * 20 * 6)
+  }
+
+  // ---- limits and number edges ---------------------------------------------------
+
+  private val limits = Witness.mapper.getFactory.streamReadConstraints()
+
+  /** Runs `body` on a thread with a 256 MB stack: the tree path (`ofNode`,
+   *  `merge`) recurses once per nesting level, and a thousand levels can
+   *  overflow a default thread stack before the JIT has compiled it. */
+  private def onDeepStack(body: => Unit): Unit = {
+    var failure: Throwable = null
+    val t = new Thread(null, () => try body catch { case e: Throwable => failure = e }, "deep", 1L << 28)
+    t.start()
+    t.join()
+    if (failure != null) throw failure
+  }
+
+  test("nesting depth, number length and name length at and one past the mapper's limits") {
+    val depth = limits.getMaxNestingDepth
+    onDeepStack {
+      for (d <- Seq(depth - 2, depth - 1, depth, depth + 1); acc <- Seq(WNull, WObj.empty)) {
+        check(acc, "[" * d + "]" * d)
+        check(acc, """{"a":""" * d + "1" + "}" * d)
+        check(acc, "[" * (d - 1) + """{"a":1}""" + "]" * (d - 1))
+      }
+    }
+    val numLen = limits.getMaxNumberLength
+    for (len <- Seq(498, 499, 500, 501, numLen - 1, numLen, numLen + 1); acc <- Seq(WNull, WObj.empty)) {
+      val digits = "9" * len
+      checkAll(acc, s"""{"n":$digits}""", s"""{"n":-${digits.drop(1)}}""", s"""{"n":1.${digits.drop(2)}}""",
+        s"""{"n":${digits.drop(4)}e-5}""", s"""{"n":0.${"0" * (len - 3)}1}""")
+    }
+    val nameLen = limits.getMaxNameLength
+    for (len <- Seq(nameLen - 1, nameLen, nameLen + 1)) {
+      val k = "k" * len
+      val acc = check(WObj.empty, s"""{"$k":1}""")
+      checkAll(acc, s"""{"$k":2}""", s"""{"$k":"s"}""", s"""{"a":1,"$k":2.5}""")
+      check(WObj.empty, s"""{"é${"k" * (len / 2)}":1}""")
+    }
+  }
+
+  test("18- and 19-digit numbers at the Long limits") {
+    val edges = Seq("999999999999999999", "-999999999999999999", "1000000000000000000", "9223372036854775807",
+      "-9223372036854775808", "9223372036854775808", "-9223372036854775809", "99999999999999999.9",
+      "0.999999999999999999", "0.9999999999999999999", "123456789012345678.5", "1.000000000000000000",
+      "-92233720368547758.07", "922337203685477580.7", "0.000000000000000001", "1000000000000000000.0")
+    for (e <- edges; acc <- Seq(WNull, num, WNum(BigDecimal("-1E+400"), BigDecimal("1E+400"), 0),
+        WNum(BigDecimal("0.5"), BigDecimal("0.5"), 1), WNum(BigDecimal("-123456789012345678901"), BigDecimal(3), 2)))
+      check(acc, e)
+    var acc: Witness = WObj.empty
+    for (e <- edges ++ edges.reverse) acc = check(acc, s"""{"n":$e}""")
+  }
+
+  test("negative scales, -0 and -0.0") {
+    var acc: Witness = WObj.empty
+    for (l <- Seq("100.0", "1e3", "1E+2", "100", "1000.000", "-0", "-0.0", "0", "0.0", "-0e0", "1e-3", "-100.0",
+        "2E+1", "20.00", "-1e3", "1.0e2", "120.0"))
+      acc = check(acc, s"""{"n":$l}""")
+    for (l <- Seq("100.0", "-0", "-0.0", "1e3", "120.0"); a <- Seq(WNull, WNum(BigDecimal("1E+2"), BigDecimal("1E+2"), -2),
+        WNum(BigDecimal(0), BigDecimal(0), 0), WNum(BigDecimal("-1.5"), BigDecimal("1E+3"), 1)))
+      check(a, l)
+  }
+
+  /** A JSON `\uXXXX` escape, spelled out so that Scala does not read it
+   *  as a Unicode escape of its own. */
+  private def esc(hex: String): String = "\\" + "u" + hex
+
+  test("an escaped key equal to a plain key is a duplicate; escaped names never match a raw key") {
+    val ab = check(WObj.empty, """{"ab":1}""")
+    val b = esc("0062")
+    for (acc <- Seq(WNull, WObj.empty, ab, WMap(WNull)))
+      checkAll(acc, s"""{"a$b":1,"ab":2}""", s"""{"ab":"x","a$b":2}""", s"""{"a$b":true}""",
+        s"""{"${esc("0061")}b":[1],"ab":[2]}""")
+    // names no raw key can spell: a quote, a backslash, a control character
+    for (name <- Seq("a\\\"b", "a\\\\b", "a\\nb", "a" + esc("0000"))) {
+      val acc = check(WObj.empty, "{\"" + name + "\":1,\"c\":2}")
+      checkAll(acc, "{\"" + name + "\":2}", """{"a"b":1}""", "{\"a\\b\":1}", "{\"a\nb\":1}",
+        "{\"a\u0000\":1}", """{"c":3,"a":4}""")
+    }
+  }
+
+  test("lone surrogates: escaped in the JSON text, and raw in the String overload") {
+    val (hi, lo) = (esc("d800"), esc("dc00"))
+    for (acc <- Seq(WNull, WObj.empty, check(WObj.empty, """{"k?":1,"s":"abc"}""")))
+      checkAll(acc, s"""{"s":"$hi"}""", s"""{"s":"${lo}x${esc("d83d")}"}""", s"""{"k$hi":1}""", s"""{"k?":2,"k$hi":1}""")
+    val named = check(WObj.empty, s"""{"k$hi":1}""")
+    checkAll(named, """{"k?":"x"}""", s"""{"k$hi":2}""", s"""{"k$hi":"x"}""")
+    // raw unpaired surrogates: `getBytes` would turn each into `?`
+    for (acc <- Seq(WNull, WObj.empty, named, check(WObj.empty, """{"k?":1,"s":"a"}"""));
+        line <- Seq("{\"s\":\"a\ud800b\"}", "{\"s\":\"\udc00\"}", "{\"k\ud800\":1}", "{\"k?\":\"\ud800\"}",
+          "{\"s\":\"\ud83d\ude00\"}", "{\"s\":1}\ud800", "\ud800{\"s\":1}", "{\"s\":\ud800}", "{\"s\"\udbff:1}")) {
+      assert(line.exists(Character.isSurrogate))
+      val expected = tree(acc, line, ts = false)
+      val actual = outcome(Witness.foldJson(acc, line, "ctx", inferTimestamps = false))
+      assert(same(expected, actual), s"\n  acc: ${brief(acc)}\n  line: ${brief(line)}\n  tree: ${brief(expected)}\n  scan(String): ${brief(actual)}")
     }
   }
 
