@@ -50,8 +50,8 @@ final case class WNum(min: BigDecimal, max: BigDecimal, maxScale: Int) extends W
   /** Rendered precision: max magnitude precision after widening. */
   def precision: Int = math.max(minW.precision, maxW.precision)
 
-  /** min and max unscaled, for the scan's allocation-free compare: built on
-   *  first use, or handed over by the scan that built this witness. */
+  /** min and max unscaled, for the scan's allocation-free compare; built on
+   *  first use. */
   @transient private[this] var unscaledBounds: Unscaled = _
   private[schemer] def unscaled: Unscaled = {
     var u = unscaledBounds
@@ -61,7 +61,6 @@ final case class WNum(min: BigDecimal, max: BigDecimal, maxScale: Int) extends W
     }
     u
   }
-  private[schemer] def withUnscaled(u: Unscaled): WNum = { unscaledBounds = u; this }
 }
 
 /** Array witness: a single merged element witness. An empty array is

@@ -132,9 +132,6 @@ private[schemer] final class KeyTable(fields: Vector[(String, Witness)]) {
     s
   }
 
-  /** The UTF-8 bytes of field `i`, or null when no scanned key can name it. */
-  def name(i: Int): Array[Byte] = names(i)
-
   /** Position of the field named by the `len` bytes at `base`/`addr`, or -1. */
   def find(base: AnyRef, addr: Long, len: Int): Int = {
     val h = KeyTable.hash(base, addr, len)
@@ -288,17 +285,6 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
 
   private def colon(): Unit = { skipWs(); expect(':'); skipWs() }
 
-  /** Whether the key at `pos` (after its opening quote) is `name` and its
-   *  closing quote; steps past both if so. A non-null `name` holds only
-   *  bytes a key may hold unescaped ([[KeyTable.scannable]]). */
-  private def keyIs(name: Array[Byte]): Boolean =
-    name != null && pos + name.length < end && {
-      val len = name.length
-      var i = 0
-      while (i < len && name(i) == Platform.getByte(base, off + pos + i)) i += 1
-      i == len && at(pos + len) == '"' && { pos += len + 1; true }
-    }
-
   private def text(start: Int, len: Int): String = {
     val a = new Array[Byte](len)
     Platform.copyMemory(base, off + start, a, Platform.BYTE_ARRAY_OFFSET, len)
@@ -318,16 +304,11 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
     var seen = 0L
     var seenWide: Array[Boolean] = null
     var added: java.util.LinkedHashMap[String, Witness] = null
-    // documents repeat their key order: the field after the last matched
-    // one is tried first, in place, before the key is scanned and hashed
-    var hint = 0
     var more = true
     while (more) {
       expect('"')
-      var start = -1
-      val ix =
-        if (hint < n && keyIs(keys.name(hint))) hint
-        else { start = key(); keys.find(base, off + start, keyLen) }
+      val start = key()
+      val ix = keys.find(base, off + start, keyLen)
       colon()
       if (ix >= 0) {
         if (n <= 64) {
@@ -341,7 +322,6 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
         val old = o.fields(ix)._2
         val w = value(old, depth)
         if (w ne old) fields = fields.updated(ix, fields(ix)._1 -> w)
-        hint = ix + 1
       } else {
         // a repeated new key keeps its first position and its last value,
         // as `readTree` keeps it
@@ -520,11 +500,10 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
           else {
             val v = BigDecimal(java.math.BigDecimal.valueOf(u, scale))
             WNum(if (below) v else w.min, if (above) v else w.max, math.max(w.maxScale, scale))
-              .withUnscaled(new Unscaled(if (below) u else bounds.min, if (above) u else bounds.max))
           }
         case WNull =>
           val v = BigDecimal(java.math.BigDecimal.valueOf(u, scale))
-          WNum(v, v, scale).withUnscaled(new Unscaled(u, u))
+          WNum(v, v, scale)
         case _ => throw Fallback
       }
     }
