@@ -65,10 +65,8 @@ object Tables {
    *  metadata reads (the catalog-metadata cache any warehouse keeps).
    *  The memoized value is a LOGICAL PLAN over an immutable file set
    *  (testdata is read-only), never data: every action still scans
-   *  parquet. Registered with [[CorpusCaches]] like every other
-   *  per-corpus memo. */
-  private val dfCache = CorpusCaches.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame])
+   *  parquet. */
+  private val dfCache = CorpusCaches.memo[(String, String), DataFrame]()
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     // runtime-settable SQL confs; must be on before the events read resolves.
@@ -80,8 +78,7 @@ object Tables {
     // pinning even when it arrives on a cache hit.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    dfCache.getOrElseUpdate((spark.sparkContext.applicationId, sfDir, table),
-      normalizeTs(spark.read.parquet(s"$sfDir/$table.parquet")))
+    dfCache(spark, (sfDir, table))(normalizeTs(spark.read.parquet(s"$sfDir/$table.parquet")))
   }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")

@@ -50,13 +50,9 @@ object Dedup extends Logging {
    *  artifact (consumed by dedup_minhash_lsh AND dedup_lsh_eval) —
    *  snapshotted once per (application, dir) like [[shingleIndex]], so
    *  the evaluation query never repays the signature chain. */
-  private val minhashPairCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val minhashPairCache = graft.CorpusCaches.snapshots[String]()
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashPairCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(minhashLshCompute(spark, dir)).df
-    })
+    minhashPairCache(spark, dir)(minhashLshCompute(spark, dir))
 
   private def minhashLshCompute(spark: SparkSession, dir: String): DataFrame = {
     val k = 32; val bands = 8; val rows = k / bands
@@ -151,8 +147,7 @@ object Dedup extends Logging {
    *  the earlier per-query persists guarded against locally — this hoists
    *  the same barrier to the corpus level. RDD-level snapshot, so a
    *  consumer's `catalog.clearCache()` can't drop it between readers. */
-  private val shingleCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val shingleCache = graft.CorpusCaches.snapshots[String]()
   /** The PACKED per-document shingle snapshot — ONE ROW PER DOCUMENT
    *  (doc_id, source, shs: array<long>), not the exploded (doc_id,
    *  source, sh) stream: the exploded form repeats the doc_id, the
@@ -163,12 +158,11 @@ object Dedup extends Logging {
    *  (~20× smaller) and gives per-doc set sizes as a map-side `size()`.
    *  Shingling still runs once per corpus. */
   private[graft] def packedShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(Tables.documents(spark, dir)
+    shingleCache(spark, dir) {
+      Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"),
-          array_distinct(wordShingleHashes(col("text"), 3)).as("shs"))).df
-    })
+          array_distinct(wordShingleHashes(col("text"), 3)).as("shs"))
+    }
   /** The exploded (doc_id, source, sh) view every 3-gram consumer reads —
    *  a map-side explode over [[packedShingles]] that pipelines into the
    *  consumer's first shuffle; Catalyst prunes `source` where unused. */
@@ -193,22 +187,18 @@ object Dedup extends Logging {
    *  lifetime. The qualifying set is O(near-dup pairs) — tens of
    *  thousands of rows at any measured scale — and the stream that
    *  distills it is transient: shuffles reaped at the post-build GC. */
-  private val pairCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val pairCache = graft.CorpusCaches.snapshots[String](truncateLineage = true)
   private[graft] def qualifyingPairCounts(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(
-        shinglePairCounts(spark, dir).filter(
-          // ngramJaccard's keep: inter/(n_a+n_b-inter) >= 0.5 — exact in
-          // integers (the double division can't round a strict miss up to
-          // 0.5 below 2^52)
-          (col("inter") * 2 >= col("n_a") + col("n_b") - col("inter")) ||
-          // containment's keep, both directions, its exact half-up form
-          (col("n_a") >= 5 && expr("(2 * inter * 10000 + n_a) div (2 * n_a)") >= 8000L) ||
-          (col("n_b") >= 5 && expr("(2 * inter * 10000 + n_b) div (2 * n_b)") >= 8000L)),
-        truncateLineage = true).df
-    })
+    pairCache(spark, dir) {
+      shinglePairCounts(spark, dir).filter(
+        // ngramJaccard's keep: inter/(n_a+n_b-inter) >= 0.5 — exact in
+        // integers (the double division can't round a strict miss up to
+        // 0.5 below 2^52)
+        (col("inter") * 2 >= col("n_a") + col("n_b") - col("inter")) ||
+        // containment's keep, both directions, its exact half-up form
+        (col("n_a") >= 5 && expr("(2 * inter * 10000 + n_a) div (2 * n_a)") >= 8000L) ||
+        (col("n_b") >= 5 && expr("(2 * inter * 10000 + n_b) div (2 * n_b)") >= 8000L))
+    }
 
   /** The TRANSIENT full pair-count stream — one pass of the posting-array
    *  suffix pairing over the shared shingle snapshot, set sizes attached
@@ -286,13 +276,9 @@ object Dedup extends Logging {
    *  final 2-join + threshold pass too, which the sf10 profile showed
    *  re-running per consumer (~17 s each at 500k docs). The output is
    *  O(near-dup pairs) — tiny at any scale. */
-  private val jaccardPairCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val jaccardPairCache = graft.CorpusCaches.snapshots[String]()
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(ngramJaccardCompute(spark, dir)).df
-    })
+    jaccardPairCache(spark, dir)(ngramJaccardCompute(spark, dir))
 
   /** PER-DOC SHINGLE COUNTS — |shingles(doc)|, the third shared artifact
    *  of the shingle family: every Jaccard/containment consumer needs it,
@@ -699,19 +685,13 @@ object Dedup extends Logging {
    *  (application, dir) and snapshotted: [[dedupClusters]] and
    *  [[dedupCanonical]] are two consumers of the same clustering — a real
    *  pipeline persists the label frame once and reads it twice, it never
-   *  re-runs the pair join + star contraction per consumer. Keyed by
-   *  applicationId so a fresh session (new data) recomputes; the snapshot
+   *  re-runs the pair join + star contraction per consumer. The snapshot
    *  is an RDD-level persist, so a consumer's `catalog.clearCache()`
    *  can't silently drop it between the two reads. The cached frame is
    *  (node, label) pairs only — O(documents-in-clusters), never text. */
-  private val labelCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val labelCache = graft.CorpusCaches.snapshots[String]()
   private[graft] def ngramClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    labelCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(
-        connectedComponents(ngramJaccard(spark, dir).select("id_a", "id_b"))).df
-    })
+    labelCache(spark, dir)(connectedComponents(ngramJaccard(spark, dir).select("id_a", "id_b")))
 
   /** Near-dup CLUSTERS: connected components of the n-gram-Jaccard pair
    *  graph — the step that turns pairwise evidence into the keep/drop

@@ -41,20 +41,17 @@ object GraphOps {
    *  Edge building is one self-equi-join of the distinct (order, part)
    *  projection on the order key — the same inverted-index discipline as
    *  the shingle joins, never a cartesian. */
-  private val edgeCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val edgeCache = graft.CorpusCaches.snapshots[String]()
   private[graft] def bulkCoPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
+    edgeCache(spark, dir) {
       val orderParts = Tables.lineitem(spark, dir)
         .filter(col("l_quantity") >= 40)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      DatasetBridge.snapshot(
-        orderParts.as("a").join(orderParts.as("b"), "ok")
-          .filter(col("a.pk") < col("b.pk"))
-          .select(col("a.pk").as("x"), col("b.pk").as("y"))
-          .distinct()).df
-    })
+      orderParts.as("a").join(orderParts.as("b"), "ok")
+        .filter(col("a.pk") < col("b.pk"))
+        .select(col("a.pk").as("x"), col("b.pk").as("y"))
+        .distinct()
+    }
 
   /** PageRank (3 rounds, d = 0.85) over the bulk co-purchase graph:
    *  parts are linked when they appear in the same order in bulk
@@ -180,13 +177,9 @@ object GraphOps {
    *  [[labelPropagation]] and [[modularity]] read — one propagation, two
    *  consumers, snapshotted per (application, dir) exactly like the edge
    *  base (the per-corpus-artifact sharing discipline). */
-  private val lpaCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val lpaCache = graft.CorpusCaches.snapshots[String]()
   private[graft] def lpaLabels(spark: SparkSession, dir: String): DataFrame =
-    lpaCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(lpaLabelsUncached(spark, dir)).df
-    })
+    lpaCache(spark, dir)(lpaLabelsUncached(spark, dir))
 
   private def lpaLabelsUncached(spark: SparkSession, dir: String): DataFrame = {
     val und = bulkCoPurchaseEdges(spark, dir)

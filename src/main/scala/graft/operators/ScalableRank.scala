@@ -131,16 +131,11 @@ object ScalableRank {
    *  scan they all run in O(value domain) — at 100 TB this is the
    *  difference between five full corpus scans and five reads of a ~600k-
    *  row artifact. `key` names the (table, expression) pair. */
-  private val vcCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame])
+  private val vcCache = graft.CorpusCaches.snapshots[(String, String)]()
   def sharedValueCounts(spark: org.apache.spark.sql.SparkSession, dir: String,
                         key: String, valueCol: String)
                        (build: => DataFrame): DataFrame =
-    vcCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, key), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(
-        build.groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))).df
-    })
+    vcCache(spark, (dir, key))(build.groupBy(col(valueCol)).agg(count(lit(1)).as("__c")))
 
   /** The locate half of [[valuesAtGlobalRanks]], over an EXISTING
    *  `(valueCol, countCol)` table (a [[sharedValueCounts]] snapshot or any

@@ -172,10 +172,9 @@ object SchemerQueries {
    *  Results are cast to width-stable types so the oracle holds at any
    *  scale factor (the inferred integral widths tighten with data range:
    *  SMALLINT event_id at sf0.01, INT at sf0.1). */
-  private val ndjsonDirs =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), String])
+  private val ndjsonDirs = graft.CorpusCaches.memo[String, String]()
   def schemaDrivenRead(spark: SparkSession, dir: String): DataFrame = {
-    val path = ndjsonDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    val path = ndjsonDirs(spark, dir) {
       val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_ndjson_" +
         s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
       Tables.events(spark, dir)
@@ -184,7 +183,7 @@ object SchemerQueries {
         .write.mode("overwrite").text(out)
       graft.ScratchFiles.deleteOnExit(java.nio.file.Paths.get(out))
       out
-    })
+    }
     val witness = InferSchema.inferPath(spark, path)
     val schema = graft.schemer.HiveRender.toSparkSchema(witness)
     spark.read.schema(schema).json(path)

@@ -34,23 +34,20 @@ object SessionAndSkew {
    *  per-corpus-artifact discipline of the shingle index / edge base).
    *  q30 deliberately stays on the native session_window operator — it
    *  exists to exercise that operator, not to share this plan. */
-  private val sessCache = graft.CorpusCaches.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val sessCache = graft.CorpusCaches.snapshots[String]()
   private[operators] def gapSessions(spark: SparkSession, dir: String): DataFrame =
-    sessCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
+    sessCache(spark, dir) {
       val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      DatasetBridge.snapshot(
-        Tables.events(spark, dir)
-          .select(col("user_id"), col("event_id"), expr("ts div 1000").as("ts_us"))
-          .withColumn("new_sess",
-            when(col("ts_us") - lag("ts_us", 1).over(byUser) >= 1800000000L, 1).otherwise(0))
-          .withColumn("sess_id",
-            sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy("user_id", "sess_id")
-          .agg(min("ts_us").as("s_us"), max("ts_us").as("e_us"),
-            count(lit(1)).as("n_events"))).df
-    })
+      Tables.events(spark, dir)
+        .select(col("user_id"), col("event_id"), expr("ts div 1000").as("ts_us"))
+        .withColumn("new_sess",
+          when(col("ts_us") - lag("ts_us", 1).over(byUser) >= 1800000000L, 1).otherwise(0))
+        .withColumn("sess_id",
+          sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy("user_id", "sess_id")
+        .agg(min("ts_us").as("s_us"), max("ts_us").as("e_us"),
+          count(lit(1)).as("n_events"))
+    }
 
   /** Gap-based sessions per user via the native session_window operator;
    *  emits the same per-user session census as q15 (30-min gap). */

@@ -46,10 +46,9 @@ object SharedHistograms {
    *  values within a tie group form the same set under either
    *  orientation), and ntile buckets derive from `i` and `n` with
    *  [[ScalableRank.withNtile]]'s exact arithmetic. */
-  private val revRankCache = graft.CorpusCaches.register(
-    scala.collection.concurrent.TrieMap.empty[(String, String), (DataFrame, Long, Long)])
+  private val revRankCache = graft.CorpusCaches.memo[String, (DataFrame, Long, Long)]()
   def partRevenueRanked(spark: SparkSession, dir: String): (DataFrame, Long, Long) =
-    revRankCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    revRankCache(spark, dir) {
       import org.apache.spark.sql.graft.DatasetBridge
       val rev = Tables.lineitem(spark, dir)
         .groupBy(col("l_partkey"))
@@ -64,5 +63,5 @@ object SharedHistograms {
       snap.rdd.count()
       releaseScratch()
       (snap.df, n, t)
-    })
+    }
 }

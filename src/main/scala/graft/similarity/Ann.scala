@@ -65,11 +65,9 @@ object Ann {
    *  cluster the same corpus with the same parameters, and a production
    *  deployment trains that index once and fans out, exactly like the
    *  dedup module's shingle-index snapshot. */
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), Array[Array[Double]]]
+  private val centroidCache = graft.CorpusCaches.memo[(String, Int, Int), Array[Array[Double]]]()
   def trainedCentroids(spark: SparkSession, dir: String, k: Int, iters: Int): Array[Array[Double]] =
-    centroidCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, k, iters),
-      kmeansCentroids(Tables.embeddings(spark, dir), k, iters))
+    centroidCache(spark, (dir, k, iters))(kmeansCentroids(Tables.embeddings(spark, dir), k, iters))
 
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
     var centroids: Array[Array[Double]] = emb.filter(col("vec_id") < k).orderBy("vec_id")
@@ -266,13 +264,9 @@ object Ann {
    *  shingle-index discipline): brute and IVF paths, their query
    *  subsets, and the IVF seed collect all read these materialized rows
    *  instead of re-running the quantization per consumer. */
-  private val rangeQuantCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val rangeQuantCache = graft.CorpusCaches.snapshots[String]()
   private[similarity] def rangeQuantSnapshot(spark: SparkSession, dir: String): DataFrame =
-    rangeQuantCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      import org.apache.spark.sql.graft.DatasetBridge
-      DatasetBridge.snapshot(rangeQuantPlan(Tables.embeddings(spark, dir))).df
-    })
+    rangeQuantCache(spark, dir)(rangeQuantPlan(Tables.embeddings(spark, dir)))
 
   /** The exact integer membership test + output shape shared by the brute
    *  and IVF-pruned radius searches: input must carry
@@ -1035,11 +1029,12 @@ object Ann {
    *  (vec_id, neighbor_id, rank) — the graph-index artifact shared by
    *  [[knnGraph]] and [[knnGraphRecall]] (the [[rangeQuantSnapshot]]
    *  discipline): the Σ|cell|² in-cell pair stage runs once per corpus,
-   *  not once per consumer. */
-  private val knnEdgeCache =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+   *  not once per consumer. A plain [[graft.CorpusCaches.memo]] rather
+   *  than the snapshot form: the snapshot itself must materialize inside
+   *  the build's scoped conf. */
+  private val knnEdgeCache = graft.CorpusCaches.memo[String, DataFrame]()
   private[similarity] def knnEdgesSnapshot(spark: SparkSession, dir: String): DataFrame =
-    knnEdgeCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    knnEdgeCache(spark, dir) {
       import org.apache.spark.sql.graft.DatasetBridge
       // The top-3 aggregate over the Σ|cell|² pair stream is a typed
       // (ObjectHashAggregate) aggregate, and Spark's sort-based fallback
@@ -1074,7 +1069,7 @@ object Ann {
         prev match { case Some(v) => spark.conf.set(key, v)
                      case None    => spark.conf.unset(key) }
       }
-    })
+    }
 
   /** The level-2 split rule, pure and unit-testable: a cell is HOT iff its
    *  population exceeds 2× the mean (pop·k > 2·n, cross-multiplied), and a
@@ -1111,12 +1106,8 @@ object Ann {
     explodeRanks(grouped, "vec_id", "neighbor_id")
   }
 
-  /** The two sides of the in-(sub)cell pair join, exposed separately so
-   *  [[graft.KnnCensus]] can measure the EXACT pair cardinality without
-   *  running the join (group each side by the join key and multiply the
-   *  per-key counts) — the diagnostic for "where does the build's time
-   *  go" at scales the oracle sweep never reaches. */
-  private[graft] def knnIndexSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** The two sides of the in-(sub)cell pair join [[buildKnnEdges]] runs. */
+  private def knnIndexSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val emb = Tables.embeddings(spark, dir)
     val n = emb.count()
     val k = math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong)

@@ -251,14 +251,14 @@ object EventStreams {
       enriched: DataFrame, sliding: DataFrame, typeUserCounts: DataFrame,
       attributed: DataFrame, fileSink: DataFrame, sessionWin: DataFrame,
       dedupWm: DataFrame, leftJoin: DataFrame, cep: DataFrame, backfill: DataFrame)
-  private val replays = graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[String, Replay])
+  private val replays = graft.CorpusCaches.memo[String, Replay]()
 
   /** One shared AvailableNow replay per sf directory: the four streaming
    *  harness queries start concurrently and are awaited together, then each
    *  entry reads its own memory sink. Whichever entry the harness calls
    *  first pays the (single) replay; the others are lookups. */
   private def replay(spark: SparkSession, dir: String): Replay =
-    replays.getOrElseUpdate(dir, {
+    replays(spark, dir) {
       val tag = java.lang.Long.toHexString(System.nanoTime())
       val hourlyName = s"stream_hourly_$tag"
       val schemaName = s"stream_schema_$tag"
@@ -574,7 +574,7 @@ object EventStreams {
           case None => spark.conf.unset(providerKey)
         }
       }
-    })
+    }
 
   /** Streaming hourly counts replayed over the parquet — same result as the
    *  batch plan, so it carries a real oracle. */
@@ -715,24 +715,21 @@ object EventStreams {
    *  bounded AvailableNow replay the target equals the batch aggregate —
    *  the exact oracle. */
   private[graft] val UpsertBuckets = 8
-  // keyed by (applicationId, dir) like every other per-corpus cache — a
-  // restarted session must replay, not be handed a frame bound to a
-  // stopped SparkContext. Roots are exposed so specs can audit per-batch
-  // file identity across target versions.
-  private val upserts =
-    graft.CorpusCaches.register(scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
+  private val upserts = graft.CorpusCaches.memo[String, DataFrame]()
+  // roots are exposed so specs can audit per-batch file identity across
+  // target versions
   private[graft] val upsertRoots =
     scala.collection.concurrent.TrieMap.empty[(String, String), java.nio.file.Path]
   def streamForeachUpsert(spark: SparkSession, dir: String,
                           filesPerTrigger: Option[Int] = None): DataFrame =
-    upserts.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    upserts(spark, dir) {
       val root = tempDirWithCleanup("graft_foreach_upsert")
       upsertRoots((spark.sparkContext.applicationId, dir)) = root
       val q = startUpsertQuery(spark, dir, root, filesPerTrigger)
       q.awaitTermination()
       spark.read.parquet(root.resolve("current").toString)
         .select("user_id", "event_type", "n_events")
-    }).orderBy("user_id", "event_type")
+    }.orderBy("user_id", "event_type")
 
   /** The upsert query itself, start-only — split out so the crash-recovery
    *  spec can kill it mid-replay (via the `poison` hook, which fires after

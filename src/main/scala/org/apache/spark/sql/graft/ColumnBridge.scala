@@ -31,7 +31,15 @@ object ColumnBridge {
 object DatasetBridge {
   final case class Snapshot(df: org.apache.spark.sql.DataFrame,
                             rdd: org.apache.spark.rdd.RDD[_]) {
-    def release(): Unit = rdd.unpersist(blocking = false)
+    /** Unpersist and forget: once out of [[live]], nothing here keeps the
+     *  RDD (and the shuffle dependencies in its lineage) reachable, so the
+     *  ContextCleaner can reap its shuffle files as soon as the caller
+     *  drops the frame — a loop that releases each round's snapshot keeps
+     *  its scratch bounded instead of waiting for [[releaseAll]]. */
+    def release(): Unit = {
+      live.remove(this)
+      rdd.unpersist(blocking = false)
+    }
   }
 
   /** Storage level for snapshots — the [[graft.Tuning.snapshotLevel]] dial
@@ -42,9 +50,10 @@ object DatasetBridge {
   private val level: org.apache.spark.storage.StorageLevel =
     graft.Tuning.snapshotLevel
 
-  // every live snapshot, so a long multi-corpus session can release the
-  // pinned storage in bulk (graft.CorpusCaches.releaseAll) instead of
-  // accumulating one persisted artifact per (application, dir) forever
+  // every snapshot not yet released, so a long multi-corpus session can
+  // release the pinned storage in bulk (graft.CorpusCaches.releaseAll)
+  // instead of accumulating one persisted artifact per (application, dir)
+  // forever
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Snapshot]()
 
   /** @param truncateLineage cut the RDD's lineage after materializing
@@ -86,7 +95,7 @@ object DatasetBridge {
    *  across a release. */
   def releaseAll(): Unit = {
     var s = live.poll()
-    while (s != null) { s.release(); s = live.poll() }
+    while (s != null) { s.rdd.unpersist(blocking = false); s = live.poll() }
   }
 }
 

@@ -54,4 +54,69 @@ class CorpusCachesSpec extends AnyFunSuite {
     assert(rebuilt == answers.head._1)
     CorpusCaches.releaseAll()
   }
+
+  test("concurrent callers of one key run the build once and share its value") {
+    val memo = CorpusCaches.memo[String, AnyRef]()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val threads = 8
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val futures = (1 to threads).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[AnyRef] {
+          def call(): AnyRef = {
+            barrier.await()
+            memo(spark, "k") { builds.incrementAndGet(); Thread.sleep(200); new Object }
+          }
+        })
+      }
+      val values = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get == 1, "the build must run once per key")
+      assert(values.forall(_ eq values.head), "every caller must get the one built value")
+    } finally pool.shutdownNow()
+  }
+
+  test("releaseAll drops a factory-made memo: the next call builds again") {
+    val memo = CorpusCaches.memo[String, AnyRef]()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def get() = memo(spark, "k") { builds.incrementAndGet(); new Object }
+    val first = get()
+    assert(get() eq first)
+    assert(builds.get == 1)
+    CorpusCaches.releaseAll()
+    assert(!(get() eq first))
+    assert(builds.get == 2)
+  }
+
+  test("a build that throws leaves the key buildable") {
+    val memo = CorpusCaches.memo[String, String]()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def get() = memo(spark, "k") {
+      if (builds.incrementAndGet() == 1) throw new IllegalStateException("first build fails")
+      "built"
+    }
+    intercept[IllegalStateException](get())
+    assert(get() == "built")
+    assert(get() == "built")
+    assert(builds.get == 2)
+  }
+
+  test("a released snapshot's RDD becomes unreachable") {
+    // a snapshot a loop releases (kcore rounds, CC rounds) must not stay
+    // strongly reachable until releaseAll: its RDD pins the lineage's
+    // shuffle dependencies, and the ContextCleaner reaps shuffle files only
+    // once those are garbage
+    import org.apache.spark.sql.graft.DatasetBridge
+    def snapshotAndRelease(): java.lang.ref.WeakReference[AnyRef] = {
+      val s = DatasetBridge.snapshot(
+        spark.range(0, 1000).groupBy((col("id") % 7).as("k")).count())
+      assert(s.df.count() == 7)
+      s.release()
+      new java.lang.ref.WeakReference[AnyRef](s.rdd)
+    }
+    val ref = snapshotAndRelease()
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(100); tries += 1 }
+    assert(ref.get == null, "a released snapshot's RDD must not stay reachable")
+  }
 }
