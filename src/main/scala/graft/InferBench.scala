@@ -2,6 +2,7 @@ package graft
 
 import graft.schemer.{HiveRender, InferSchema}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.FileLines
 
 /** Layer throughput of schema inference over an NDJSON path, e.g. an
  *  `InferCorpusGen` corpus:
@@ -10,8 +11,9 @@ import org.apache.spark.sql.SparkSession
  *
  *  For `local[1]` and then `local[$SPARK_GRAFT_CPUS]` (default: all cores)
  *  it prints one JSON line with two rates in MB of input per second: the
- *  scan alone (counting the rows of the same line scan the fold reads) and
- *  the scan plus the witness fold. Their difference is the fold's share.
+ *  scan alone (counting the rows of the line scan `inferPath` folds) and
+ *  `inferPath` itself, the scan plus the witness fold. Their difference is
+ *  the fold's share.
  *  Each figure is the median of five runs after two warm-ups; the inferred
  *  definition is printed once at the end. */
 object InferBench {
@@ -27,7 +29,6 @@ object InferBench {
         .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("INFER_SPLIT", "134217728"))
         .config("spark.ui.enabled", "false").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
-      def docs = spark.read.textFile(path)
       def rate(body: => Unit): Double = {
         (1 to 2).foreach(_ => body)
         val secs = (1 to reps).map { _ =>
@@ -38,8 +39,8 @@ object InferBench {
         mb / secs(reps / 2)
       }
       var rows = 0L
-      val scan = rate { rows = InferSchema.lines(docs).count() }
-      val fold = rate { definition = HiveRender.definition(InferSchema.inferWitness(docs)) }
+      val scan = rate { rows = FileLines(spark, path).count() }
+      val fold = rate { definition = HiveRender.definition(InferSchema.inferPath(spark, path)) }
       println(f"""{"master":"local[$threads]","rows":$rows,"input_mb":$mb%.1f,""" +
         f""""scan_mb_s":$scan%.1f,"scan_fold_mb_s":$fold%.1f}""")
       spark.stop()

@@ -44,9 +44,11 @@ object HiveRender {
 
   /** Numeric bucket selection (Schemer.scala:77-85). Integral-fit checks use
    *  BOTH min and max so negatives can't be under-typed (documented fix of
-   *  the reference's max-only witness, SURVEY.md §1.2). */
+   *  the reference's max-only witness, SURVEY.md §1.2). They read the
+   *  bounds unwidened: widening to scale 0 keeps a value, and the fit
+   *  checks are by value (`1e999999999` would not widen). */
   private def renderNum(n: WNum): String = {
-    val (mn, mx) = (n.minW, n.maxW)
+    val (mn, mx) = (n.min, n.max)
     if (n.maxScale == 0) {
       if (mn.isValidByte && mx.isValidByte) "TINYINT"
       else if (mn.isValidShort && mx.isValidShort) "SMALLINT"
@@ -90,7 +92,7 @@ object HiveRender {
     case WTs(_, true) => DateType
     case WTs(_, false) => TimestampType
     case n: WNum =>
-      val (mn, mx) = (n.minW, n.maxW)
+      val (mn, mx) = (n.min, n.max)
       if (n.maxScale == 0) {
         if (mn.isValidByte && mx.isValidByte) ByteType
         else if (mn.isValidShort && mx.isValidShort) ShortType

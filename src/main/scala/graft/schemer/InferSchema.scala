@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
+import org.apache.spark.sql.graft.FileLines
 import org.apache.spark.sql.types.StringType
 
 /**
@@ -27,7 +28,9 @@ object InferSchema {
    *  non-object top-level row fails with RowMismatch — both reference
    *  behaviors that a WNull seed would silently change. Rows arrive as the
    *  scan's UTF-8 bytes; a line is decoded to a String, and its diagnostic
-   *  context built, only when the row fails. */
+   *  context built, only when the row fails. Each row is used up, its
+   *  failure decode included, before the next is taken: a row of the file
+   *  scan wraps the line reader's buffer. */
   private def foldPartition(idx: Int, it: Iterator[InternalRow]): Iterator[(Int, Witness)] = {
     var rec = 0L
     var acc: Witness = WObj.empty
@@ -61,8 +64,18 @@ object InferSchema {
    *  range-witnesses in range order — O(#partitions / rangeSize) driver
    *  memory, so an 800k-split corpus collects ~800 range witnesses, not
    *  800k. One level suffices up to rangeSize² (≈1M) splits. */
-  def inferWitness(ds: Dataset[String], rangeSize: Int = 1024): Witness = {
-    val parts = lines(ds).mapPartitionsWithIndex(foldPartition, preservesPartitioning = true)
+  def inferWitness(ds: Dataset[String], rangeSize: Int = 1024): Witness =
+    fold(lines(ds), rangeSize)
+
+  /** Infer from an NDJSON file/directory path (reference O1: file scan).
+   *  Folds the same partitions and lines as
+   *  `inferWitness(spark.read.textFile(path))`, read straight from the
+   *  file scan ([[FileLines]]). */
+  def inferPath(spark: SparkSession, path: String): Witness =
+    fold(FileLines(spark, path))
+
+  private def fold(rows: RDD[InternalRow], rangeSize: Int = 1024): Witness = {
+    val parts = rows.mapPartitionsWithIndex(foldPartition, preservesPartitioning = true)
     val ranged =
       if (parts.getNumPartitions <= rangeSize) parts
       else parts
@@ -86,10 +99,6 @@ object InferSchema {
     val line = ds.col("`" + ds.columns.head.replace("`", "``") + "`")
     ds.select(line.cast(StringType)).queryExecution.toRdd
   }
-
-  /** Infer from an NDJSON file/directory path (reference O1: file scan). */
-  def inferPath(spark: SparkSession, path: String): Witness =
-    inferWitness(spark.read.textFile(path))
 
   // ---- SQL-function form ---------------------------------------------------
 

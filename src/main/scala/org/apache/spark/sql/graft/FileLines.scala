@@ -1,0 +1,72 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{DataSource, FilePartition, FileScanRDD,
+  HadoopFileLinesReader, HadoopFsRelation, PartitionedFile}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+/**
+ * The lines of a text path as an RDD of one-field rows, read without a
+ * Dataset plan: no analysis, optimisation, physical planning or scan
+ * codegen per call, and no copy of a line after Hadoop's line reader.
+ *
+ * Every step is the one `spark.read.textFile(path)` runs, taken from the
+ * same Spark code, so the RDD has the same partitions, the same files in
+ * the same order inside each partition and the same lines:
+ *  - `DataSource.resolveRelation` globs, skips names starting with `_` or
+ *    `.` (`_SUCCESS`, checksum files), lists, infers `k=v` partition
+ *    directories and raises the missing-path error;
+ *  - the relation's files are split and packed as `FileSourceScanExec`
+ *    does: `isSplitable` per file (a `.gz` file is one split), splits
+ *    sorted by length descending, `FilePartition.getFilePartitions` with
+ *    `FilePartition.maxSplitBytes` (`maxPartitionBytes`, `openCostInBytes`);
+ *  - Spark's `FileScanRDD` runs the read (`ignoreMissingFiles`,
+ *    `ignoreCorruptFiles`, input metrics), and each split is read by
+ *    `HadoopFileLinesReader`, as `TextFileFormat` reads it (CR, LF and CRLF
+ *    line ends, codecs, the UTF-8 BOM, the line that crosses a split
+ *    boundary belongs to the split it starts in).
+ *
+ * Each row's string wraps the reader's buffer, so a row is valid only until
+ * the iterator advances: a consumer must use each row before taking the
+ * next, and copy what it keeps. Partition values of `k=v` directories are
+ * not part of the row.
+ */
+object FileLines {
+  def apply(session: SparkSession, path: String): RDD[InternalRow] = {
+    val spark = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val relation = DataSource(spark, paths = Seq(path), className = "text")
+      .resolveRelation().asInstanceOf[HadoopFsRelation]
+    val dirs = relation.location.listFiles(Nil, Nil)
+    val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = dirs.flatMap { dir =>
+      dir.files.flatMap { file =>
+        val filePath = file.getPath
+        PartitionedFileUtil.splitFiles(file, filePath,
+          relation.fileFormat.isSplitable(spark, relation.options, filePath), maxSplitBytes, dir.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    val conf = SerializableConfiguration.broadcast(spark.sparkContext,
+      spark.sessionState.newHadoopConfWithOptions(relation.options))
+    new FileScanRDD(spark, readLines(conf), FilePartition.getFilePartitions(spark, splits, maxSplitBytes),
+      relation.dataSchema, Nil, Map.empty, new FileSourceOptions(CaseInsensitiveMap(relation.options)))
+  }
+
+  private def readLines(conf: Broadcast[SerializableConfiguration]): PartitionedFile => Iterator[InternalRow] =
+    file => {
+      val reader = new HadoopFileLinesReader(file, conf.value.value)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
+      val row = new GenericInternalRow(1)
+      reader.map { line =>
+        row.update(0, UTF8String.fromBytes(line.getBytes, 0, line.getLength))
+        row
+      }
+    }
+}

@@ -1,0 +1,182 @@
+package graft.schemer
+
+import graft.SparkTestSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.FileLines
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path}
+import java.util.zip.GZIPOutputStream
+
+/** Differential guard of the path reader: `inferPath(p)` reads the same
+ *  partitions, with the same lines in the same order, as
+ *  `spark.read.textFile(p)`, and folds them to the same witness — compared
+ *  with field order and BigDecimal scales — or fails with the same
+ *  exception class and message (`partition i record n` included). Each
+ *  path is read at Spark's default split size and at two small ones, where
+ *  every file is cut into several splits, every cut falls inside a line,
+ *  and the short tail splits are packed several to a partition. */
+class PathReaderSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  private type Outcome[A] = Either[(Class[_], String), A]
+
+  /** A failure as its innermost cause: a task's exception reaches the
+   *  caller wrapped in a `SparkException` whose message names the task. */
+  private def attempt[A](f: => A): Outcome[A] =
+    try Right(f) catch {
+      case e: Exception =>
+        var c: Throwable = e
+        while (c.getCause != null) c = c.getCause
+        Left(c.getClass -> c.getMessage)
+    }
+
+  private def same(a: Outcome[Witness], b: Outcome[Witness]): Boolean = (a, b) match {
+    case (Right(x), Right(y)) => WitnessEquality.exact(x, y)
+    case _ => a == b
+  }
+
+  private def partitions(rows: RDD[InternalRow]): Seq[(Int, Vector[String])] =
+    rows.mapPartitionsWithIndex((i, it) => Iterator(i -> it.map(_.getUTF8String(0).toString).toVector))
+      .collect().toSeq
+
+  /** (maxPartitionBytes, openCostInBytes): Spark's defaults, then two split
+   *  sizes that cut every fixture file; [[Split]] divides both. */
+  private val Split = 64
+  private val Configs = Seq(None, Some((Split, 16L)), Some((4 * Split, 4L)))
+
+  private def withSplits[A](conf: Option[(Int, Long)])(body: => A): A = conf match {
+    case None => body
+    case Some((max, open)) =>
+      spark.conf.set("spark.sql.files.maxPartitionBytes", max.toLong)
+      spark.conf.set("spark.sql.files.openCostInBytes", open)
+      try body finally {
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+      }
+  }
+
+  /** Checks `path` at every split size; returns the default-size outcome. */
+  private def check(path: String): Outcome[Witness] = Configs.map { conf =>
+    withSplits(conf) {
+      val rows = attempt(partitions(InferSchema.lines(spark.read.textFile(path))))
+      assert(attempt(partitions(FileLines(spark, path))) == rows, s"partitions of $path at $conf")
+      val expected = attempt(InferSchema.inferWitness(spark.read.textFile(path)))
+      val actual = attempt(InferSchema.inferPath(spark, path))
+      assert(same(expected, actual), s"$path at $conf\n  textFile: $expected\n  path:     $actual")
+      actual
+    }
+  }.head
+
+  private def eolBytes(b: Byte): Boolean = b == '\n' || b == '\r'
+
+  /** `n` NDJSON lines joined by `eol`, each with a key of its own (so the
+   *  witness's field order records the order the lines were folded in),
+   *  padded so that no line end touches a multiple of [[Split]]: every
+   *  split boundary falls inside a line. `blankEvery` inserts blank lines;
+   *  `last` ends the file with `eol` or not. */
+  private def ndjson(file: String, n: Int, eol: String, prefix: Array[Byte] = Array.empty,
+                     blankEvery: Int = 0, last: Boolean = true): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    out.write(prefix)
+    for (i <- 0 until n) {
+      var pad = 0
+      def line = s"""{"${file}_$i":$i,"s":"${"x" * (i % 7 + pad)}","n":${i * 3}.${"5" * (i % 3)}1}"""
+      def ok = {
+        val endAt = out.size + line.getBytes(UTF_8).length
+        (endAt until endAt + eol.length + 1).forall(p => p % Split != 0)
+      }
+      while (!ok) pad += 1
+      out.write(line.getBytes(UTF_8))
+      if (i < n - 1 || last) out.write(eol.getBytes(UTF_8))
+      if (blankEvery > 0 && i % blankEvery == blankEvery - 1 && i < n - 1 &&
+          (out.size + 1 until out.size + eol.length + 1).forall(p => p % Split != 0))
+        out.write(eol.getBytes(UTF_8))
+    }
+    val bytes = out.toByteArray
+    assert((Split until bytes.length by Split).forall(b => !eolBytes(bytes(b - 1)) && !eolBytes(bytes(b))),
+      s"$file: a split boundary sits on a line end")
+    bytes
+  }
+
+  private def gzip(bytes: Array[Byte]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    val gz = new GZIPOutputStream(out)
+    gz.write(bytes)
+    gz.close()
+    out.toByteArray
+  }
+
+  private def write(dir: Path, name: String, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(dir.resolve(name).getParent)
+    Files.write(dir.resolve(name), bytes)
+  }
+
+  private val Bom = Array(0xef, 0xbb, 0xbf).map(_.toByte)
+
+  /** Files of different sizes, line ends and codecs, and files the scan
+   *  must skip (they would fail the fold if read). */
+  private def mixedDir(): Path = {
+    val dir = Files.createTempDirectory("graft_path_reader")
+    write(dir, "part-000.json", ndjson("a", 30, "\n", blankEvery = 4))
+    write(dir, "part-001.json", ndjson("b", 12, "\r\n"))
+    write(dir, "part-002.json", ndjson("c", 20, "\r"))
+    write(dir, "part-003.json", ndjson("d", 5, "\n", prefix = Bom, last = false))
+    val gz = gzip(ndjson("e", 40, "\n"))
+    assert(gz.length > 2 * Split, "test premise: the .gz file is larger than a split")
+    write(dir, "part-004.json.gz", gz)
+    write(dir, "_SUCCESS", "not json".getBytes(UTF_8))
+    // a checksum file of a file that is not there: the local file system
+    // would verify part-000.json against a `.part-000.json.crc`
+    write(dir, ".part-999.json.crc", Array[Byte](99, 114, 99, 0, 1, 2, 3, -1))
+    dir
+  }
+
+  test("a directory of files with mixed line ends, blank lines, a BOM, a .gz file and hidden files") {
+    val dir = mixedDir()
+    val w = check(dir.toString)
+    assert(w.isRight, w)
+    val fields = w.toOption.get.asInstanceOf[WObj].fields.map(_._1).toSet
+    // every file is read, the BOM is not part of the first key, and the
+    // hidden files are skipped (they are not JSON)
+    assert(Seq("a_29", "b_11", "c_19", "d_0", "d_4", "e_39").forall(fields), fields)
+    for (f <- Seq("part-000.json", "part-001.json", "part-002.json", "part-003.json", "part-004.json.gz"))
+      assert(check(dir.resolve(f).toString).isRight, f)
+  }
+
+  test("a glob path") {
+    val dir = mixedDir()
+    assert(check(dir.toString + "/part-00[0-2].json").isRight)
+    assert(check(dir.toString + "/part-*").isRight)
+  }
+
+  test("k=v subdirectories") {
+    val dir = Files.createTempDirectory("graft_path_reader_kv")
+    write(dir, "k=1/a.json", ndjson("a", 9, "\n"))
+    write(dir, "k=2/b.json", ndjson("b", 14, "\n"))
+    write(dir, "k=2/c.json", ndjson("c", 3, "\r\n"))
+    write(dir, "_SUCCESS", Array.empty)
+    assert(check(dir.toString).isRight)
+  }
+
+  test("an empty directory folds to the empty object") {
+    val dir = Files.createTempDirectory("graft_path_reader_empty")
+    assert(check(dir.toString) == Right(WObj.empty))
+  }
+
+  test("a missing path raises the same exception") {
+    val missing = Files.createTempDirectory("graft_path_reader_missing").resolve("nope.json").toString
+    val outcome = check(missing)
+    assert(outcome.isLeft && outcome.left.toOption.get._2.contains("nope.json"), outcome)
+  }
+
+  test("a conflicting row names the same partition and record") {
+    val dir = mixedDir()
+    write(dir, "part-005.json", ndjson("f", 6, "\n") ++ """{"n":{"x":1}}""".getBytes(UTF_8))
+    val outcome = check(dir.toString)
+    assert(outcome.isLeft && outcome.left.toOption.get._2.contains("record"), outcome)
+  }
+}

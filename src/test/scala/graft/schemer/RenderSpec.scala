@@ -1,5 +1,7 @@
 package graft.schemer
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Boundary tests for every render bucket of the reference's `out`
@@ -108,5 +110,37 @@ class RenderSpec extends AnyFunSuite {
     assert(HiveRender.toSparkType(num("12.345")) == FloatType)
     assert(HiveRender.toSparkType(WStr(9)) == StringType)
     assert(HiveRender.toSparkType(WArr(WBool)) == ArrayType(BooleanType, containsNull = true))
+  }
+
+  private def fold(lines: String*): Witness =
+    lines.foldLeft(WObj.empty: Witness)(Witness.foldJson(_, _, "ctx", inferTimestamps = false))
+
+  test("a scale no number can be widened to still renders, and its mismatch message builds") {
+    val tiny = fold("""{"x":1e-999999999}""", """{"x":5}""")
+    assert(HiveRender.definition(tiny) == "x NUMERIC(1000000000, 999999999)")
+    assert(HiveRender.toSparkSchema(tiny).head.dataType == org.apache.spark.sql.types.DecimalType(38, 38))
+    val e = intercept[RowMismatch](Witness.foldJson(tiny, """{"x":[1]}""", "ctx", inferTimestamps = false))
+    assert(e.getMessage.contains("NUMERIC(1000000000, 999999999)"), e.getMessage)
+    val huge = fold("""{"x":1e999999999}""", """{"x":5}""")
+    assert(HiveRender.definition(huge) == "x NUMERIC(1000000000, 0)")
+    assert(HiveRender.toSparkSchema(huge).head.dataType == org.apache.spark.sql.types.DecimalType(38, 0))
+  }
+
+  test("precision without widening equals the precision of the widened bounds") {
+    def widened(x: BigDecimal, s: Int): Int = (if (x.scale >= s) x else x.setScale(s)).precision
+    val unscaled = Gen.oneOf(
+      Gen.const(BigInt(0)),
+      Gen.choose(-999L, 999L).map(BigInt(_)),
+      Gen.choose(Long.MinValue, Long.MaxValue).map(BigInt(_)),
+      Gen.choose(19, 60).flatMap(d => Gen.listOfN(d, Gen.choose(0, 9)).map(ds => BigInt(ds.mkString("1", "", "")))))
+    val gen = for {
+      a <- unscaled; b <- unscaled
+      sa <- Gen.choose(-25, 40); sb <- Gen.choose(-25, 40) // negative: 1e3; large: tiny fractions
+      s <- Gen.choose(-25, 80)
+    } yield (BigDecimal(new java.math.BigDecimal(a.bigInteger, sa)), BigDecimal(new java.math.BigDecimal(b.bigInteger, sb)), s)
+    (0 until 2000).flatMap(i => gen.apply(Gen.Parameters.default, Seed(7L + i))).foreach { case (a, b, s) =>
+      val n = WNum(a min b, a max b, s)
+      assert(n.precision == math.max(widened(n.min, s), widened(n.max, s)), (a, b, s))
+    }
   }
 }

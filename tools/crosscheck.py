@@ -3,7 +3,8 @@
 
 Usage: crosscheck.py <sfDir> <verifyOutDir>
 
-Two comparisons per query, both must pass:
+Each oracle query runs once, into a temp table; two comparisons per query
+read it, and both must pass:
 
 1. DRIVER EMULATION — reproduces the driver's observed pipeline exactly
    (validated 47/47 against CORRECTNESS_r01.json): the Spark result is read
@@ -78,14 +79,15 @@ def main(sf_dir, out_dir):
     for name, sql in sorted(oracles.items()):
         spark_dir = Path(out_dir, name)
         if not spark_dir.exists():
-            print(f"MISSING {name}")
+            print(f"MISSING {name}", flush=True)
             n_fail += 1
             continue
         problems = []
+        con.execute(f"CREATE TEMP TABLE oracle_result AS {sql.strip().rstrip(';')}")
 
         # mode 1: driver emulation
         spark_pd = pd.read_parquet(spark_dir)
-        oracle_pd = con.execute(sql).df()
+        oracle_pd = con.execute("SELECT * FROM oracle_result").df()
         se, oe = emu_canon(spark_pd), emu_canon(oracle_pd)
         if sorted(spark_pd.columns) != sorted(oracle_pd.columns):
             problems.append(f"emu columns {sorted(spark_pd.columns)} vs {sorted(oracle_pd.columns)}")
@@ -97,7 +99,7 @@ def main(sf_dir, out_dir):
         # mode 2: strict exact values + duckdb logical types
         srel = con.sql(f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')")
         stypes = sorted(zip(srel.columns, map(str, srel.types)))
-        orel = con.sql(sql)
+        orel = con.sql("SELECT * FROM oracle_result")
         otypes = sorted(zip(orel.columns, map(str, orel.types)))
         if stypes != otypes:
             problems.append(f"strict types {stypes} vs {otypes}")
@@ -107,16 +109,15 @@ def main(sf_dir, out_dir):
             diffs = [i for i, (a, b) in enumerate(zip(ss, os_)) if a != b][:3]
             detail = "; ".join(f"row{i} spark={ss[i]} oracle={os_[i]}" for i in diffs) or f"len {len(ss)} vs {len(os_)}"
             problems.append(f"strict values: {detail}")
+        con.execute("DROP TABLE oracle_result")  # not held while the next query runs
 
         if problems:
-            print(f"FAIL {name}:")
-            for p in problems:
-                print(f"   {p}")
+            print(f"FAIL {name}:\n" + "\n".join(f"   {p}" for p in problems), flush=True)
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(ss)} rows)")
+            print(f"PASS {name} ({len(ss)} rows)", flush=True)
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    print(f"== {n_pass} pass, {n_fail} fail ==", flush=True)
     return 1 if n_fail else 0
 
 
