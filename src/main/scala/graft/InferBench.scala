@@ -13,8 +13,10 @@ import org.apache.spark.sql.graft.FileLines
  *  it prints one JSON line with two rates in MB of input per second: the
  *  scan alone (counting the rows of the line scan `inferPath` folds) and
  *  `inferPath` itself, the scan plus the witness fold. Their difference is
- *  the fold's share.
- *  Each figure is the median of five runs after two warm-ups; the inferred
+ *  the fold's share. `call_ms` is the driver's fixed cost per call before
+ *  any job: the median of 21 constructions of the scan's RDD
+ *  (`FileLines(spark, path)`: listing, splitting, the Hadoop conf).
+ *  Each rate is the median of five runs after two warm-ups; the inferred
  *  definition is printed once at the end. */
 object InferBench {
   def main(args: Array[String]): Unit = {
@@ -41,8 +43,14 @@ object InferBench {
       var rows = 0L
       val scan = rate { rows = FileLines(spark, path).count() }
       val fold = rate { definition = HiveRender.definition(InferSchema.inferPath(spark, path)) }
+      val calls = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        FileLines(spark, path)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val callMs = calls(calls.size / 2)
       println(f"""{"master":"local[$threads]","rows":$rows,"input_mb":$mb%.1f,""" +
-        f""""scan_mb_s":$scan%.1f,"scan_fold_mb_s":$fold%.1f}""")
+        f""""scan_mb_s":$scan%.1f,"scan_fold_mb_s":$fold%.1f,"call_ms":$callMs%.2f}""")
       spark.stop()
     }
     println(definition)

@@ -85,9 +85,15 @@ object InferSchema {
           range -> ws.toArray.sortBy(_._1).iterator.map(_._2)
             .foldLeft(Witness.bottom)(Witness.merge(_, _, s"range $range reduce"))
         }
-    ranged.collect().sortBy(_._1).iterator.map(_._2)
+    ranged.sparkContext.runJob(ranged, partitionWitnesses).flatten.sortBy(_._1).iterator.map(_._2)
       .foldLeft(WObj.empty: Witness)(Witness.merge(_, _, "final reduce"))
   }
+
+  /** The result function of [[fold]]'s job: what `collect()` runs, but
+   *  declared here. Spark's closure cleaner reads the class file of the
+   *  class that declares a job's closure on every job; `collect()`'s own
+   *  closure would make that `RDD`, a large class read from the Spark jar. */
+  private val partitionWitnesses: Iterator[(Int, Witness)] => Array[(Int, Witness)] = _.toArray
 
   /** The rows [[inferWitness]] folds: the scan's own rows, one UTF-8 line
    *  each (as Spark's JsonInferSchema reads a Dataset[String]); `ds.rdd`

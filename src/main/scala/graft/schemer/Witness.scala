@@ -41,15 +41,9 @@ final case class WStr(maxLen: Int) extends Witness
  *  max scale (Schemer.scala:52); we track min too so that negative values
  *  can't be typed into a bucket that can't hold them (SURVEY.md §1.2). */
 final case class WNum(min: BigDecimal, max: BigDecimal, maxScale: Int) extends Witness {
-  /** min/max widened to the common scale — the reference's `setScale`
-   *  widening. [[precision]] is computed without it, and the renderer's
-   *  bucket checks compare values, so graft itself calls neither. */
-  def minW: BigDecimal = widen(min)
-  def maxW: BigDecimal = widen(max)
-  private def widen(x: BigDecimal): BigDecimal =
-    if (x.scale >= maxScale) x else x.setScale(maxScale)
-  /** Rendered precision: max magnitude precision after widening, computed
-   *  without widening. A non-zero `x` widened to scale `S > x.scale` gains
+  /** Rendered precision: the larger precision of min and max once each is
+   *  widened to `maxScale` (the reference's `setScale`), computed without
+   *  widening. A non-zero `x` widened to scale `S > x.scale` gains
    *  `S - x.scale` trailing zeros; zero keeps precision 1 at any scale. So
    *  a scale that cannot be widened to (`1e-999999999` next to `5`) still
    *  yields a precision instead of an `ArithmeticException`. */

@@ -103,6 +103,58 @@ private[schemer] object WitnessScan {
 
   private def isWs(b: Int): Boolean = b == ' ' || b == '\n' || b == '\r' || b == '\t'
   private def isDigit(b: Int): Boolean = b >= '0' && b <= '9'
+
+  // ---- eight bytes at a time ------------------------------------------------------
+  //
+  // A word is the 8 bytes at an address, read with `Platform.getLong`; on a
+  // little-endian machine its byte i is the byte at address + i. The
+  // scanner reads a word only where all 8 bytes lie inside the row, and
+  // only on a little-endian machine: elsewhere the byte loops are the only
+  // path. Per-byte flags follow Langdale & Lemire, "Parsing Gigabytes of
+  // JSON per Second" (VLDB J 2019): each flag sets the high bit of its byte
+  // and may set spurious bits above a flagged byte (a borrow or carry
+  // moves upward only), so the LOWEST flagged byte is always exact.
+
+  private[schemer] val Words = java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
+
+  private val Ones = 0x0101010101010101L
+  private val Highs = 0x8080808080808080L
+
+  /** Flags the bytes of `x` that are zero. */
+  private def zeros(x: Long): Long = (x - Ones) & ~x & Highs
+
+  /** Flags the bytes that end a clean ASCII run inside a string or key:
+   *  `"`, `\`, a control byte (< 0x20) or a non-ASCII byte (≥ 0x80). */
+  private[schemer] def stops(x: Long): Long =
+    zeros(x ^ (Ones * '"')) | zeros(x ^ (Ones * '\\')) | ((x - Ones * 0x20) & ~x & Highs) | (x & Highs)
+
+  /** Index of the first flagged byte of a non-zero flag word. */
+  private[schemer] def first(flags: Long): Int = java.lang.Long.numberOfTrailingZeros(flags) >>> 3
+
+  /** The low `n` bytes of `x` (0 ≤ n ≤ 7), the rest zeroed. */
+  private[schemer] def low(x: Long, n: Int): Long = x & ((1L << (n << 3)) - 1)
+
+  /** `x ^ Digit0` maps the bytes '0'..'9' to the values 0..9. */
+  private val Digit0 = Ones * '0'
+
+  /** Number of leading bytes of `x ^ Digit0` that are digits (0..8): a
+   *  byte is a digit exactly when it is at most 9, i.e. when neither it
+   *  nor it plus 0x76 has its high bit set. */
+  private[schemer] def digitRun(t: Long): Int = {
+    val flags = ((t + Ones * 0x76) | t) & Highs
+    if (flags == 0) 8 else first(flags)
+  }
+
+  /** The value of the `n` leading digit values of `t` (1 ≤ n ≤ 8), first
+   *  digit most significant: shifted up so that the free bytes read as
+   *  leading zeros, then combined pairwise by multiply-shift (Lemire,
+   *  "Number Parsing at a Gigabyte per Second", SPE 2021). */
+  private[schemer] def digitsValue(t: Long, n: Int): Long = {
+    var v = t << ((8 - n) << 3)
+    v = v * 10 + (v >>> 8) // byte 2i: the two-digit pair 2i, 2i+1
+    (((v & 0x000000ff000000ffL) * 0x000f424000000064L) +
+      (((v >>> 16) & 0x000000ff000000ffL) * 0x0000271000000001L)) >>> 32
+  }
 }
 
 /** A [[WNum]]'s bounds as unscaled Longs ([[WitnessScan.compact]]). Only
@@ -112,11 +164,14 @@ private[schemer] final class Unscaled(val min: Long, val max: Long)
 /** The field names of one [[WObj]] as UTF-8 bytes, with an open-addressing
  *  table over them ([[WObj.keys]]); only final fields, as for [[Unscaled]].
  *  The table depends on the names alone, so a rebuild that changes only
- *  values shares it. */
+ *  values shares it. Each name is stored with its [[KeyTable.hash]] and its
+ *  last word (its final `length % 8` bytes, [[KeyTable.lastWord]]), which
+ *  the scan computes while it looks for the key's closing quote. */
 private[schemer] final class KeyTable(fields: Vector[(String, Witness)]) {
   val size: Int = fields.size
   private val names: Array[Array[Byte]] = fields.iterator.map(f => KeyTable.scannable(f._1)).toArray
   private val hashes: Array[Int] = names.map(b => if (b == null) 0 else KeyTable.hash(b, Platform.BYTE_ARRAY_OFFSET, b.length))
+  private val lasts: Array[Long] = names.map(b => if (b == null) 0L else KeyTable.lastWord(b, Platform.BYTE_ARRAY_OFFSET, b.length))
   private val mask = Integer.highestOneBit(math.max(4, size * 2) - 1) * 2 - 1
   private val slots: Array[Int] = {
     val s = new Array[Int](mask + 1)
@@ -132,27 +187,26 @@ private[schemer] final class KeyTable(fields: Vector[(String, Witness)]) {
     s
   }
 
-  /** Position of the field named by the `len` bytes at `base`/`addr`, or -1. */
-  def find(base: AnyRef, addr: Long, len: Int): Int = {
-    val h = KeyTable.hash(base, addr, len)
+  /** Position of the field named by the `len` bytes at `base`/`addr`, whose
+   *  hash is `h` and last word `last`, or -1. */
+  def find(base: AnyRef, addr: Long, len: Int, h: Int, last: Long): Int = {
     var j = h & mask
     var f = slots(j) - 1
-    while (f >= 0 && !(hashes(f) == h && same(f, base, addr, len))) {
+    while (f >= 0 && !(hashes(f) == h && lasts(f) == last && same(f, base, addr, len))) {
       j = (j + 1) & mask
       f = slots(j) - 1
     }
     f
   }
 
+  /** The name's length and its full words; its last word is already equal. */
   private def same(f: Int, base: AnyRef, addr: Long, len: Int): Boolean = {
     val b = names(f)
-    if (b == null || b.length != len) false
-    else {
+    b.length == len && {
       var i = 0
       while (i + 8 <= len &&
           Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i) == Platform.getLong(base, addr + i)) i += 8
-      while (i < len && b(i) == Platform.getByte(base, addr + i)) i += 1
-      i == len
+      i + 8 > len
     }
   }
 }
@@ -169,11 +223,36 @@ private[schemer] object KeyTable {
     else b
   }
 
+  private val Mix = 0x9e3779b97f4a7c15L
+
+  /** One full word into a running [[hash]]. */
+  def step(h: Long, word: Long): Long = (h + word) * Mix
+
+  /** The hash of a name from the [[step]]s over its full words, its
+   *  [[lastWord]] and its length. */
+  def finish(h: Long, last: Long, len: Int): Int = {
+    var x = (step(h, last) ^ len) * Mix
+    x ^= x >>> 32
+    (x ^ (x >>> 16)).toInt
+  }
+
+  /** The final `len % 8` bytes at `base`/`addr`, as the low bytes of a
+   *  little-endian word (zero when `len` is a multiple of 8). Read byte by
+   *  byte, so nothing past `len` is touched. */
+  def lastWord(base: AnyRef, addr: Long, len: Int): Long = {
+    var w = 0L
+    var i = len - 1
+    while (i >= (len & ~7)) { w = (w << 8) | (Platform.getByte(base, addr + i) & 0xffL); i -= 1 }
+    w
+  }
+
+  /** The hash of the `len` bytes at `base`/`addr`: what the scan's key loop
+   *  computes eight bytes at a time. */
   def hash(base: AnyRef, addr: Long, len: Int): Int = {
-    var h = len
+    var h = 0L
     var i = 0
-    while (i < len) { h = h * 31 + Platform.getByte(base, addr + i); i += 1 }
-    h ^ (h >>> 16)
+    while (i + 8 <= len) { h = step(h, Platform.getLong(base, addr + i)); i += 8 }
+    finish(h, lastWord(base, addr, len), len)
   }
 }
 
@@ -262,15 +341,46 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
     else throw Fallback
   }
 
-  /** Length in bytes of the key [[key]] read last. */
+  /** Length in bytes, [[KeyTable.hash]] and [[KeyTable.lastWord]] of the
+   *  key [[key]] read last. */
   private var keyLen = 0
+  private var keyHash = 0
+  private var keyLast = 0L
 
   /** The key at `pos`, after its opening quote; returns its first byte,
-   *  with the length of its UTF-8 bytes left in `keyLen` and `pos` past its
-   *  closing quote. Keys with escapes are left to the tree path, so a key's
-   *  bytes are its name. */
+   *  with its length, hash and last word left in `keyLen`, `keyHash` and
+   *  `keyLast` and `pos` past its closing quote. Keys with escapes are left
+   *  to the tree path, so a key's bytes are its name. An ASCII key is read
+   *  a word at a time, hashing each full word as it goes; a key that meets
+   *  a non-ASCII byte, or the last 7 bytes of the row, is read again by the
+   *  byte loop, which hashes it with the same function. */
   private def key(): Int = {
     val start = pos
+    if (Words) {
+      var h = 0L
+      // only `end` bounds this loop's reads: past it the key cannot close
+      // (`at` is -1 there, so `colon` falls back), and the guard keeps the
+      // read inside the row's memory
+      while (pos + 8 <= end) {
+        val x = Platform.getLong(base, off + pos)
+        val s = stops(x)
+        if (s == 0) { h = KeyTable.step(h, x); pos += 8 }
+        else {
+          val i = first(s)
+          if (at(pos + i) != '"') return byteKey(start)
+          keyLast = low(x, i)
+          pos += i
+          keyLen = pos - start
+          keyHash = KeyTable.finish(h, keyLast, keyLen)
+          return closeKey(start)
+        }
+      }
+    }
+    byteKey(start)
+  }
+
+  private def byteKey(start: Int): Int = {
+    pos = start
     var b = at(pos)
     while (b != '"') {
       if (b < 0x20 || b == '\\') throw Fallback
@@ -278,6 +388,12 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
       b = at(pos)
     }
     keyLen = pos - start
+    keyHash = KeyTable.hash(base, off + start, keyLen)
+    keyLast = KeyTable.lastWord(base, off + start, keyLen)
+    closeKey(start)
+  }
+
+  private def closeKey(start: Int): Int = {
     if (keyLen >= MaxName) throw Fallback
     pos += 1
     start
@@ -308,7 +424,7 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
     while (more) {
       expect('"')
       val start = key()
-      val ix = keys.find(base, off + start, keyLen)
+      val ix = keys.find(base, off + start, keyLen, keyHash, keyLast)
       colon()
       if (ix >= 0) {
         if (n <= 64) {
@@ -397,8 +513,12 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
     val start = pos
     var units = 0
     var escaped = false
-    var b = at(pos)
-    while (b != '"') {
+    var b = 0
+    while ({
+      if (Words) { val n = cleanRun(); pos += n; units += n }
+      b = at(pos)
+      b != '"'
+    }) {
       if (b < 0x20) throw Fallback
       if (b == '\\') {
         escaped = true
@@ -411,7 +531,6 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
         units += 1
       } else if (b < 0x80) { pos += 1; units += 1 }
       else units += utf8(b)
-      b = at(pos)
     }
     if (pos - start >= MaxString) throw Fallback
     pos += 1
@@ -430,6 +549,21 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
     }
   }
 
+  /** Number of clean ASCII bytes from `pos` (each one UTF-16 unit), taken
+   *  a word at a time up to the first byte [[stops]] flags or to the last
+   *  7 bytes of the row, which the byte loop reads. Bounding the words by
+   *  `end` keeps them inside the row's memory; the result does not depend
+   *  on it, since a string still open at `end` falls back at `at(end)`. */
+  private def cleanRun(): Int = {
+    var p = pos
+    while (p + 8 <= end) {
+      val s = stops(Platform.getLong(base, off + p))
+      if (s != 0) return p + first(s) - pos
+      p += 8
+    }
+    p - pos
+  }
+
   /** [[Witness.temporalWitness]] of the string of `units` units starting at
    *  `start`. Every date and timestamp it accepts is 10 or 19–35 ASCII
    *  characters with `-` at 4 and 7, so other strings are rejected without
@@ -442,12 +576,17 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
 
   // ---- numbers ------------------------------------------------------------------
 
+  /** The unscaled value and the count of significant digits (from the
+   *  first non-zero one) of the number [[number]] is reading. */
+  private var u = 0L
+  private var digits = 0
+
   /** A number folded into `acc`, read as `readTree` stores it. */
   private def number(acc: Witness): Witness = {
     val start = pos
     if (at(pos) == '-') pos += 1
-    var u = 0L
-    var digits = 0 // significant digits, from the first non-zero one
+    u = 0L
+    digits = 0
     var scale = 0
     var b = at(pos)
     // a leading zero ends the integer part, so `01` fails at the `1`
@@ -455,6 +594,8 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
       pos += 1
       b = at(pos)
     } else if (isDigit(b)) {
+      digitWords()
+      b = at(pos)
       while (isDigit(b)) {
         if (digits < 19) u = u * 10 + (b - '0')
         digits += 1
@@ -467,6 +608,9 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
       pos += 1
       b = at(pos)
       if (!isDigit(b)) throw Fallback
+      // leading zeros of a fraction (`0.000123`) are not significant: the
+      // byte loop skips them, and the words take over after the first
+      // significant digit
       while (isDigit(b)) {
         if (digits > 0 || b != '0') {
           if (digits < 19) u = u * 10 + (b - '0')
@@ -474,6 +618,7 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
         }
         scale += 1
         pos += 1
+        if (digits > 0) scale += digitWords()
         b = at(pos)
       }
     }
@@ -507,6 +652,30 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
         case _ => throw Fallback
       }
     }
+  }
+
+  /** Takes the digits at `pos` a word at a time into `u` and `digits` while
+   *  whole words are digits, stopping at the run's end or at the last 7
+   *  bytes of the row, which the byte loop reads; returns how many it took.
+   *  Past 18 digits `u` is no longer kept: the number is then re-read as a
+   *  BigDecimal. Bounding the words by `end` is what keeps a row's digits
+   *  its own: a bare number at the end of a row is followed in memory by
+   *  whatever the buffer held before. */
+  private def digitWords(): Int = {
+    val from = pos
+    if (Words) {
+      var n = 8
+      while (n == 8 && pos + 8 <= end) {
+        val t = Platform.getLong(base, off + pos) ^ Digit0
+        n = digitRun(t)
+        if (n > 0) {
+          if (digits + n <= 18) u = u * Pow10(n) + digitsValue(t, n)
+          digits += n
+          pos += n
+        }
+      }
+    }
+    pos - from
   }
 
   /** A number too long for a Long or written with an exponent: the

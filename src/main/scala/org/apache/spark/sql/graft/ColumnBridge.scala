@@ -38,9 +38,19 @@ object DatasetBridge {
      *  its scratch bounded instead of waiting for [[releaseAll]]. */
     def release(): Unit = {
       live.remove(this)
-      rdd.unpersist(blocking = false)
+      unpersist(rdd)
     }
   }
+
+  /** `rdd.unpersist`, without the WARN it logs for a locally checkpointed
+   *  RDD ("its lineage has been truncated and cannot be recomputed"): for a
+   *  `truncateLineage` snapshot that is the intended release, and the memo
+   *  that held it is dropped with it. Such an RDD keeps its storage level,
+   *  which only matters for a recompute it can no longer run. */
+  private def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
 
   /** Storage level for snapshots — the [[graft.Tuning.snapshotLevel]] dial
    *  (set `SPARK_GRAFT_SNAPSHOT_LEVEL=DISK_ONLY` for big single-JVM runs
@@ -95,7 +105,7 @@ object DatasetBridge {
    *  across a release. */
   def releaseAll(): Unit = {
     var s = live.poll()
-    while (s != null) { s.rdd.unpersist(blocking = false); s = live.poll() }
+    while (s != null) { unpersist(s.rdd); s = live.poll() }
   }
 }
 

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.TaskContext
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
@@ -12,6 +13,8 @@ import org.apache.spark.sql.execution.datasources.{DataSource, FilePartition, Fi
   HadoopFileLinesReader, HadoopFsRelation, PartitionedFile}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+
+import java.lang.ref.WeakReference
 
 /**
  * The lines of a text path as an RDD of one-field rows, read without a
@@ -53,10 +56,32 @@ object FileLines {
           relation.fileFormat.isSplitable(spark, relation.options, filePath), maxSplitBytes, dir.values)
       }
     }.sortBy(_.length)(Ordering[Long].reverse)
-    val conf = SerializableConfiguration.broadcast(spark.sparkContext,
-      spark.sessionState.newHadoopConfWithOptions(relation.options))
+    val conf = broadcastConf(spark.sparkContext, spark.sessionState.newHadoopConfWithOptions(relation.options))
     new FileScanRDD(spark, readLines(conf), FilePartition.getFilePartitions(spark, splits, maxSplitBytes),
       relation.dataSchema, Nil, Map.empty, new FileSourceOptions(CaseInsensitiveMap(relation.options)))
+  }
+
+  /** The last conf broadcast, with the context it belongs to and the
+   *  properties of the conf it was built from. One slot: a caller that
+   *  alternates confs rebuilds, but nothing accumulates. The context is
+   *  held weakly, so the slot never keeps a stopped context alive. */
+  private final class Slot(val sc: WeakReference[SparkContext], val props: java.util.Map[String, String],
+      val conf: Broadcast[SerializableConfiguration])
+  @volatile private var slot: Slot = _
+
+  /** A broadcast of `hadoopConf`, reused while the context is live and the
+   *  conf's properties are unchanged. Every SQL conf of the session is
+   *  copied into `hadoopConf`, so any `spark.conf.set` makes a new one. */
+  private def broadcastConf(sc: SparkContext, hadoopConf: Configuration): Broadcast[SerializableConfiguration] = {
+    val props = new java.util.HashMap[String, String]
+    hadoopConf.iterator().forEachRemaining(e => props.put(e.getKey, e.getValue))
+    val last = slot
+    if (last != null && (last.sc.get eq sc) && !sc.isStopped && last.props == props) last.conf
+    else {
+      val conf = SerializableConfiguration.broadcast(sc, hadoopConf)
+      slot = new Slot(new WeakReference(sc), props, conf)
+      conf
+    }
   }
 
   private def readLines(conf: Broadcast[SerializableConfiguration]): PartitionedFile => Iterator[InternalRow] =

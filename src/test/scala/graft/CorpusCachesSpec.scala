@@ -101,6 +101,46 @@ class CorpusCachesSpec extends AnyFunSuite {
     assert(builds.get == 2)
   }
 
+  /** The messages logged while `body` runs, at the levels the session logs. */
+  private def logged(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try body finally { root.removeAppender(capture); capture.stop() }
+    lines.toArray(Array.empty[String]).toSeq
+  }
+
+  test("releasing truncated-lineage snapshots logs no lineage warning and drops their blocks") {
+    import org.apache.spark.sql.graft.{Blocks, DatasetBridge}
+    val sc = spark.sparkContext
+    def truncated() = {
+      val s = DatasetBridge.snapshot(
+        spark.range(0, 1000).groupBy((col("id") % 7).as("k")).count(), truncateLineage = true)
+      assert(s.df.count() == 7)
+      assert(Blocks.ofRdd(sc, s.rdd.id).nonEmpty, "a snapshot's blocks are stored")
+      s
+    }
+    val (one, all) = (truncated(), truncated())
+    // the warning is Spark's own; check that this session would log it
+    assert(logged(sc.parallelize(1 to 2).localCheckpoint().unpersist()).exists(_.contains("locally checkpointed")))
+    val lines = logged { one.release(); CorpusCaches.releaseAll() }
+    assert(!lines.exists(_.contains("locally checkpointed")), lines)
+    for (s <- Seq(one, all)) {
+      assert(!sc.getPersistentRDDs.contains(s.rdd.id))
+      var tries = 0
+      while (Blocks.ofRdd(sc, s.rdd.id).nonEmpty && tries < 100) { Thread.sleep(100); tries += 1 }
+      assert(Blocks.ofRdd(sc, s.rdd.id).isEmpty, s"blocks of RDD ${s.rdd.id} are still stored")
+    }
+  }
+
   test("a released snapshot's RDD becomes unreachable") {
     // a snapshot a loop releases (kcore rounds, CC rounds) must not stay
     // strongly reachable until releaseAll: its RDD pins the lineage's

@@ -173,10 +173,85 @@ class PathReaderSpec extends AnyFunSuite {
     assert(outcome.isLeft && outcome.left.toOption.get._2.contains("nope.json"), outcome)
   }
 
+  test("a SQL conf set between calls reaches the line reader") {
+    // the reader's Hadoop conf is broadcast once and reused while it is
+    // unchanged; every SQL conf is part of it
+    val dir = Files.createTempDirectory("graft_path_reader_conf")
+    val long = """{"a":1,"b":"""" + "x" * 66 + """"}"""
+    assert(long.length == 80)
+    write(dir, "a.json", s"{\"a\":1}\n$long\n".getBytes(UTF_8))
+    val p = dir.toString
+    def infer(): Witness = {
+      val w = InferSchema.inferPath(spark, p)
+      assert(WitnessEquality.exact(w, InferSchema.inferWitness(spark.read.textFile(p))), w)
+      w
+    }
+    val a = "a" -> WNum(BigDecimal(1), BigDecimal(1), 0)
+    val both = WObj(Vector(a, "b" -> WStr(66)))
+    val key = "mapreduce.input.linerecordreader.line.maxlength"
+    assert(infer() == both)
+    assert(infer() == both)
+    spark.conf.set(key, "50")
+    try assert(infer() == WObj(Vector(a)), "the 80-byte line is longer than the reader's limit")
+    finally spark.conf.unset(key)
+    assert(infer() == both)
+  }
+
+  test("after the context stops, a new session's inferPath works and the old context is released") {
+    // in a JVM of its own: a test JVM's other suites keep their session
+    val dir = Files.createTempDirectory("graft_path_reader_restart")
+    write(dir, "a.json", ndjson("a", 20, "\n"))
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.toArray
+      .map(_.toString).filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val child = new ProcessBuilder((Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvm ++
+      Seq("-cp", System.getProperty("java.class.path"), PathReaderRestart.getClass.getName.stripSuffix("$"),
+        dir.toString)): _*).redirectErrorStream(true).start()
+    val out = new String(child.getInputStream.readAllBytes(), UTF_8)
+    assert(child.waitFor() == 0, out)
+    assert(out.linesIterator.contains("same witness: true"), out)
+    assert(out.linesIterator.contains("stopped context released: true"), out)
+  }
+
   test("a conflicting row names the same partition and record") {
     val dir = mixedDir()
     write(dir, "part-005.json", ndjson("f", 6, "\n") ++ """{"n":{"x":1}}""".getBytes(UTF_8))
     val outcome = check(dir.toString)
     assert(outcome.isLeft && outcome.left.toOption.get._2.contains("record"), outcome)
+  }
+}
+
+/** [[PathReaderSpec]]'s restart case, run as a JVM of its own: infers a path
+ *  in one session and stops it, reports whether the stopped context became
+ *  unreachable, then infers the path again in a new session and reports
+ *  whether the witnesses agree. */
+object PathReaderRestart {
+  def main(args: Array[String]): Unit = {
+    import org.apache.spark.SparkContext
+    import org.apache.spark.sql.SparkSession
+    import java.lang.ref.WeakReference
+    // Hadoop starts a statistics cleaner thread on the first file system
+    // use; started while a session is active, it would inherit that session
+    // and keep its context reachable for good
+    org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    def session() = SparkSession.builder().master("local[1]").appName("restart")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    def first(): (Witness, WeakReference[SparkContext]) = {
+      val s = session()
+      s.sparkContext.setLogLevel("ERROR")
+      val w = InferSchema.inferPath(s, args(0))
+      s.stop()
+      // the next context's threads inherit this thread's active session
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      (w, new WeakReference(s.sparkContext))
+    }
+    val (w, stopped) = first()
+    // before any new call could replace what the last one left behind
+    var tries = 0
+    while (stopped.get != null && tries < 50) { System.gc(); Thread.sleep(100); tries += 1 }
+    println(s"stopped context released: ${stopped.get == null}")
+    val s = session()
+    println(s"same witness: ${WitnessEquality.exact(w, InferSchema.inferPath(s, args(0)))}")
+    s.stop()
   }
 }

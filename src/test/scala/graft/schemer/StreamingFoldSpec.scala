@@ -271,6 +271,132 @@ class StreamingFoldSpec extends AnyFunSuite {
     assert(checked >= 100 * 20 * 6)
   }
 
+  // ---- word boundaries -----------------------------------------------------------
+  //
+  // The scan reads keys, strings and digit runs 8 bytes at a time where all
+  // 8 lie inside the row, and byte by byte elsewhere. These cases put every
+  // kind of byte at every offset within a word and in the last 7 bytes of
+  // a row, where the byte loops take over.
+
+  /** Edits like [[mutate]]'s, but each placed at a chosen position. */
+  private def edit(d: Array[Byte], i: Int, rnd: scala.util.Random): Array[Byte] = {
+    val b = mutationBytes(rnd.nextInt(mutationBytes.size))
+    rnd.nextInt(3) match {
+      case 0 => d.take(i) ++ Array(b) ++ d.drop(i)
+      case 1 if i < d.length => d.take(i) ++ d.drop(i + 1)
+      case _ if i < d.length => d.updated(i, b)
+      case _ => d :+ b
+    }
+  }
+
+  test("byte mutations at every offset mod 8 and in a row's last 7 bytes: scan ≡ tree") {
+    val rnd = new scala.util.Random(19)
+    var checked = 0
+    samples(Gen.listOfN(8, genObject(3)), 60).zipWithIndex.foreach { case (seq, i) =>
+      val ts = i % 4 == 0
+      seq.foldLeft(WObj.empty: Witness) { (running, line) =>
+        val doc = line.getBytes(UTF_8)
+        val at = (0 until 8).flatMap { r =>
+          val column = r until doc.length by 8
+          if (column.isEmpty) None else Some(column(rnd.nextInt(column.size)))
+        } ++ (1 to 7).map(k => math.max(0, doc.length - k))
+        for (p <- at; acc <- Seq(running, WObj.empty)) {
+          val bytes = edit(doc, p, rnd)
+          val expected = tree(acc, new String(bytes, UTF_8), ts)
+          val scanned = stream(acc, bytes, ts)
+          assert(same(expected, scanned),
+            s"\n  acc:   ${brief(acc)}\n  bytes: ${bytes.map(b => f"${b & 0xff}%02x").mkString(" ")}\n  tree:  ${brief(expected)}\n  scan:  ${brief(scanned)}")
+          checked += 1
+        }
+        tree(running, line, ts).getOrElse(running)
+      }
+    }
+    assert(checked >= 60 * 8 * 7 * 2)
+  }
+
+  /** `body` at each of 8 offsets: the value starts `p` bytes later. */
+  private def offsets(body: String => Unit): Unit = (0 until 8).foreach(p => body(" " * p))
+
+  test("keys of 0 to 17 bytes: new, known, duplicate, and differing in one word") {
+    val base = "abcdefghijklmnopq"
+    val keys = (0 to 17).map(base.take)
+    // the same length, differing in the last word or in a full word only
+    val near = keys.filter(_.nonEmpty).flatMap(k => Seq(k.init + "Z", "Z" + k.tail))
+    val all = (keys ++ near).distinct
+    val known = check(WObj.empty, keys.map(k => s""""$k":1""").mkString("{", ",", "}"))
+    for (k <- all; acc <- Seq(WObj.empty, known)) offsets { pad =>
+      checkAll(acc, s"""{$pad"$k":2}""", s"""{"x":1,$pad"$k":"s"}""", s"""{$pad"$k":1,"$k":2.5}""",
+        s"""{"$k":{$pad"$k":true}}""", s"""{$pad"$k":1,"y":2,"$k":3}""", s"""{$pad"$k"""")
+      // a key running into the end of the row
+      checkAll(acc, s"""{$pad"$k""", s"""{$pad"${k}é":1}""", s"""{$pad"${k}\n":1}""")
+    }
+    // a wide known object, probed by every key and its neighbours
+    val wide = check(WObj.empty, all.map(k => s""""$k":1""").mkString("{", ",", "}"))
+    for (k <- all) checkAll(wide, s"""{"$k":2}""", s"""{"$k":1,"$k":2}""")
+  }
+
+  test("ASCII strings of 0 to 24 bytes ending in each stop class at each offset") {
+    val ends = Seq("", "\\n", esc("00e9"), "\\\"", "\u0001", "\u001f", "é", "😀", "\u007f")
+    var acc: Witness = WObj.empty
+    for (len <- 0 to 24; e <- ends) offsets { pad =>
+      val s = "x" * len + e
+      val lines = Seq(s"""{"s":$pad"$s"}""", s"""{"s":$pad"${s}y"}""", s"""{"s":$pad"$s""", s"""$pad"$s"""")
+      lines.foreach(check(WObj.empty, _))
+      lines.foreach(l => acc = check(acc, l))
+      check(WStr(len + 1), s"""$pad"$s"""")
+    }
+  }
+
+  test("digit runs of 1 to 20 digits in integer and fraction parts") {
+    val runs = (1 to 20).flatMap(n => Seq("9" * n, "1" + "0" * (n - 1), "1234567890123456789012".take(n)))
+    val nums = runs.flatMap(r => Seq(r, "-" + r, "0." + r, r + "." + r.reverse, "0.000" + r, "0.0" + r + "000",
+      r + ".0", r + "e3", "-" + r + "." + r))
+    val accs = Seq(WNull, num, WNum(BigDecimal("-1E+30"), BigDecimal("1E+30"), 40))
+    for (n <- nums; acc <- accs) offsets(pad => check(acc, pad + n))
+    var w: Witness = WObj.empty
+    for (n <- nums) offsets(pad => w = check(w, s"""{"n":$pad$n,"m":[$pad$n,$n]}"""))
+    // 18- and 19-digit values with the run split at every word offset
+    for (v <- Seq("999999999999999999", "9223372036854775807", "1000000000000000000", "123456789.123456789",
+        "12345678901234567.89", "0.1234567890123456789"); acc <- accs)
+      offsets(pad => checkAll(acc, pad + v, pad + "-" + v, s"""{"n":$pad$v}"""))
+  }
+
+  test("a row ends at numBytes, whatever its buffer holds past it") {
+    val tails = Seq("0123456789", "\"", "\\", "\"}", "12345678\"", "\\\"", " ", "}")
+    val docs = Seq("7", "1234567", "12345678", "123456789", "-1.5", "0.1234567", "1.25", "\"abc", "\"abcdefg",
+      """{"k":1""", """{"a":"xy""", """{"abcdefgh""", """{"n":12""", """{"n":1.""", "\"x\\", "tru",
+      """{"a":1}""", """[1,2,3""", """{"a":"b"}""")
+    val accs = Seq(WNull, WObj.empty, num, WNum(BigDecimal(1), BigDecimal(1234567), 0), WStr(3),
+      check(WObj.empty, """{"k":5,"a":"x","n":1,"abcdefgh":1}"""))
+    for (d <- docs; t <- tails; acc <- accs) {
+      val doc = d.getBytes(UTF_8)
+      val exact = outcome(Witness.foldJson(acc, UTF8String.fromBytes(doc)))
+      val buf = doc ++ t.getBytes(UTF_8)
+      val inBuffer = outcome(Witness.foldJson(acc, UTF8String.fromBytes(buf, 0, doc.length)))
+      assert(same(exact, inBuffer), s"\n  acc: $acc\n  doc: $d + $t\n  exact:  $exact\n  buffer: $inBuffer")
+    }
+    // a bare number is the case where bytes past the end would be read as
+    // the number's own digits
+    assert(Witness.foldJson(WNull, UTF8String.fromBytes("12345678".getBytes(UTF_8), 0, 7)) ==
+      WNum(BigDecimal(1234567), BigDecimal(1234567), 0))
+  }
+
+  test("string length limit: one byte under it stays on the scan; at it and past it the tree path decides") {
+    val max = limits.getMaxStringLength
+    val widest = WObj(Vector("s" -> WStr(max + 1)))
+    def row(len: Int) = "{\"s\":\"" + "x" * len + "\"}"
+    def scan(line: String) = Witness.foldJson(widest, UTF8String.fromString(line))
+    // the scan returns the accumulator itself; the tree path's merge builds
+    // an equal new one
+    assert(scan(row(max - 1)) eq widest)
+    check(widest, row(max - 1))
+    assert(!(scan(row(max)) eq widest))
+    check(widest, row(max))
+    val over = row(max + 1)
+    assert(tree(widest, over, ts = false).isLeft)
+    check(widest, over)
+  }
+
   // ---- limits and number edges ---------------------------------------------------
 
   private val limits = Witness.mapper.getFactory.streamReadConstraints()
