@@ -115,7 +115,7 @@ private[schemer] object WitnessScan {
   // and may set spurious bits above a flagged byte (a borrow or carry
   // moves upward only), so the LOWEST flagged byte is always exact.
 
-  private[schemer] val Words = java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
+  private val Words = java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
 
   private val Ones = 0x0101010101010101L
   private val Highs = 0x8080808080808080L
@@ -125,14 +125,14 @@ private[schemer] object WitnessScan {
 
   /** Flags the bytes that end a clean ASCII run inside a string or key:
    *  `"`, `\`, a control byte (< 0x20) or a non-ASCII byte (≥ 0x80). */
-  private[schemer] def stops(x: Long): Long =
+  private def stops(x: Long): Long =
     zeros(x ^ (Ones * '"')) | zeros(x ^ (Ones * '\\')) | ((x - Ones * 0x20) & ~x & Highs) | (x & Highs)
 
   /** Index of the first flagged byte of a non-zero flag word. */
-  private[schemer] def first(flags: Long): Int = java.lang.Long.numberOfTrailingZeros(flags) >>> 3
+  private def first(flags: Long): Int = java.lang.Long.numberOfTrailingZeros(flags) >>> 3
 
   /** The low `n` bytes of `x` (0 ≤ n ≤ 7), the rest zeroed. */
-  private[schemer] def low(x: Long, n: Int): Long = x & ((1L << (n << 3)) - 1)
+  private def low(x: Long, n: Int): Long = x & ((1L << (n << 3)) - 1)
 
   /** `x ^ Digit0` maps the bytes '0'..'9' to the values 0..9. */
   private val Digit0 = Ones * '0'
@@ -140,7 +140,7 @@ private[schemer] object WitnessScan {
   /** Number of leading bytes of `x ^ Digit0` that are digits (0..8): a
    *  byte is a digit exactly when it is at most 9, i.e. when neither it
    *  nor it plus 0x76 has its high bit set. */
-  private[schemer] def digitRun(t: Long): Int = {
+  private def digitRun(t: Long): Int = {
     val flags = ((t + Ones * 0x76) | t) & Highs
     if (flags == 0) 8 else first(flags)
   }
@@ -149,7 +149,7 @@ private[schemer] object WitnessScan {
    *  digit most significant: shifted up so that the free bytes read as
    *  leading zeros, then combined pairwise by multiply-shift (Lemire,
    *  "Number Parsing at a Gigabyte per Second", SPE 2021). */
-  private[schemer] def digitsValue(t: Long, n: Int): Long = {
+  private def digitsValue(t: Long, n: Int): Long = {
     var v = t << ((8 - n) << 3)
     v = v * 10 + (v >>> 8) // byte 2i: the two-digit pair 2i, 2i+1
     (((v & 0x000000ff000000ffL) * 0x000f424000000064L) +
@@ -358,9 +358,9 @@ private final class WitnessScan(base: AnyRef, off: Long, end: Int, ts: Boolean) 
     val start = pos
     if (Words) {
       var h = 0L
-      // only `end` bounds this loop's reads: past it the key cannot close
-      // (`at` is -1 there, so `colon` falls back), and the guard keeps the
-      // read inside the row's memory
+      // the guard keeps the reads inside the row's memory; the result does
+      // not depend on it, since a key still open at `end` is not followed
+      // by its colon (`at` is -1 there)
       while (pos + 8 <= end) {
         val x = Platform.getLong(base, off + pos)
         val s = stops(x)

@@ -237,14 +237,19 @@ class StreamingFoldSpec extends AnyFunSuite {
     (1 to 1 + rnd.nextInt(2)).foldLeft(doc) { (d, _) =>
       val marked = d.indices.filter(j => d(j) < 0 || d(j) == '\\')
       val i = if (marked.nonEmpty && rnd.nextBoolean()) marked(rnd.nextInt(marked.size)) else rnd.nextInt(d.length + 1)
-      val b = mutationBytes(rnd.nextInt(mutationBytes.size))
-      rnd.nextInt(3) match {
-        case 0 => d.take(i) ++ Array(b) ++ d.drop(i)
-        case 1 if i < d.length => d.take(i) ++ d.drop(i + 1)
-        case _ if i < d.length => d.updated(i, b)
-        case _ => d :+ b
-      }
+      edit(d, i, rnd)
     }
+
+  /** One single-byte edit at `i`: insert, delete or replace. */
+  private def edit(d: Array[Byte], i: Int, rnd: scala.util.Random): Array[Byte] = {
+    val b = mutationBytes(rnd.nextInt(mutationBytes.size))
+    rnd.nextInt(3) match {
+      case 0 => d.take(i) ++ Array(b) ++ d.drop(i)
+      case 1 if i < d.length => d.take(i) ++ d.drop(i + 1)
+      case _ if i < d.length => d.updated(i, b)
+      case _ => d :+ b
+    }
+  }
 
   test("byte mutations of generated documents: scan ≡ tree, both overloads") {
     val rnd = new scala.util.Random(11)
@@ -277,17 +282,6 @@ class StreamingFoldSpec extends AnyFunSuite {
   // 8 lie inside the row, and byte by byte elsewhere. These cases put every
   // kind of byte at every offset within a word and in the last 7 bytes of
   // a row, where the byte loops take over.
-
-  /** Edits like [[mutate]]'s, but each placed at a chosen position. */
-  private def edit(d: Array[Byte], i: Int, rnd: scala.util.Random): Array[Byte] = {
-    val b = mutationBytes(rnd.nextInt(mutationBytes.size))
-    rnd.nextInt(3) match {
-      case 0 => d.take(i) ++ Array(b) ++ d.drop(i)
-      case 1 if i < d.length => d.take(i) ++ d.drop(i + 1)
-      case _ if i < d.length => d.updated(i, b)
-      case _ => d :+ b
-    }
-  }
 
   test("byte mutations at every offset mod 8 and in a row's last 7 bytes: scan ≡ tree") {
     val rnd = new scala.util.Random(19)
