@@ -203,11 +203,14 @@ class PathReaderSpec extends AnyFunSuite {
     write(dir, "a.json", ndjson("a", 20, "\n"))
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.toArray
       .map(_.toString).filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val log = dir.resolve("child.log")
     val child = new ProcessBuilder((Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvm ++
       Seq("-cp", System.getProperty("java.class.path"), PathReaderRestart.getClass.getName.stripSuffix("$"),
-        dir.toString)): _*).redirectErrorStream(true).start()
-    val out = new String(child.getInputStream.readAllBytes(), UTF_8)
-    assert(child.waitFor() == 0, out)
+        dir.resolve("a.json").toString)): _*).redirectErrorStream(true).redirectOutput(log.toFile).start()
+    val finished = child.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)
+    if (!finished) child.destroyForcibly()
+    val out = new String(Files.readAllBytes(log), UTF_8)
+    assert(finished && child.exitValue == 0, out)
     assert(out.linesIterator.contains("same witness: true"), out)
     assert(out.linesIterator.contains("stopped context released: true"), out)
   }
