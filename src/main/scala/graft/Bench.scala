@@ -1,30 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
     // shuffle partitions default to the thread count (right at sf<=1);
     // big single-JVM corpora want MORE partitions than threads so each
-    // task's hash/sort state stays small — the sf10 suite runs at 128
-    // (with SPARK_GRAFT_SNAPSHOT_LEVEL=DISK_ONLY), where 32 OOMed a 16g
-    // heap on the shingle pair join
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // persisted-RDD blocks (the per-corpus DatasetBridge snapshots) are
-      // NOT compressed by default — shuffle and spill are. At sf100 the
-      // DISK_ONLY artifact set is a first-order term in the scratch
-      // budget; lz4 here is the same codec the shuffles already pay
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // task's hash/sort state stays small — the sf10 suite runs at
+    // SPARK_GRAFT_SHUFFLE=128 (with SPARK_GRAFT_SNAPSHOT_LEVEL=DISK_ONLY),
+    // where 32 OOMed a 16g heap on the shingle pair join
+    val spark = LocalSpark.session()
     // JVM/codegen warmup so the first measured query doesn't absorb
     // class-loading + first-parquet-footer costs
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -36,7 +20,7 @@ object Bench {
     // mix; warm once, report the min of two timed runs.
     def calibOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, 100000000L, 1, cpus.toInt)
+      spark.range(0, 100000000L, 1, spark.sparkContext.defaultParallelism)
         .selectExpr("id % 1000000 AS k", "xxhash64(id) AS h")
         .groupBy("k").sum("h").selectExpr("count(*)").collect()
       (System.nanoTime() - t0) / 1e9

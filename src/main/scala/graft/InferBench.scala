@@ -1,7 +1,6 @@
 package graft
 
 import graft.schemer.{HiveRender, InferSchema}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.FileLines
 
 /** Layer throughput of schema inference over an NDJSON path, e.g. an
@@ -9,7 +8,7 @@ import org.apache.spark.sql.graft.FileLines
  *
  *    SPARK_GRAFT_CPUS=4 sbt "runMain graft.InferBench data/infer_corpus"
  *
- *  For `local[1]` and then `local[$SPARK_GRAFT_CPUS]` (default: all cores)
+ *  For `local[1]` and then `local[$SPARK_GRAFT_CPUS]` (see [[LocalSpark]])
  *  it prints one JSON line with two rates in MB of input per second: the
  *  scan alone (counting the rows of the line scan `inferPath` folds) and
  *  `inferPath` itself, the scan plus the witness fold. Their difference is
@@ -22,15 +21,10 @@ object InferBench {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val reps = 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString).toInt
     val mb = inputBytes(path) / 1e6
     var definition = ""
-    for (threads <- Seq(1, cpus).distinct) {
-      val spark = SparkSession.builder().master(s"local[$threads]")
-        .config("spark.sql.shuffle.partitions", threads.toString)
-        .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("INFER_SPLIT", "134217728"))
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+    for (threads <- Seq(1, LocalSpark.defaultCpus).distinct) {
+      val spark = LocalSpark.session(cpus = threads)
       def rate(body: => Unit): Double = {
         (1 to 2).foreach(_ => body)
         val secs = (1 to reps).map { _ =>
@@ -51,7 +45,7 @@ object InferBench {
       val callMs = calls(calls.size / 2)
       println(f"""{"master":"local[$threads]","rows":$rows,"input_mb":$mb%.1f,""" +
         f""""scan_mb_s":$scan%.1f,"scan_fold_mb_s":$fold%.1f,"call_ms":$callMs%.2f}""")
-      spark.stop()
+      LocalSpark.stop(spark)
     }
     println(definition)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,12 +20,7 @@ object InferCorpusGen {
     val rows = if (args.length > 0) args(0).toLong else 2000000L
     val files = if (args.length > 1) args(1).toInt else 32
     val out = if (args.length > 2) args(2) else "data/infer_corpus"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     spark.range(rows).select(to_json(struct(
         col("id"),
         concat(lit("user_"), col("id") % 10000).as("name"),

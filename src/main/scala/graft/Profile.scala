@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: times one named query N times (default 3) at the given
   * sf dir — isolates per-query cost from suite noise when optimizing. */
 object Profile {
@@ -9,18 +7,10 @@ object Profile {
     val name = args.headOption.getOrElse("dedup_minhash_lsh")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // at 10×+ the driver SF, partitions sized for sf0.1 overfill — let a
-    // profiling run scale them the way a cluster deployment would
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // profiling run scale them (SPARK_GRAFT_SHUFFLE) the way a cluster
+    // deployment would
+    val spark = LocalSpark.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)
     for (i <- 1 to reps) {

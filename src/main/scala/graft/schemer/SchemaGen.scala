@@ -47,12 +47,7 @@ object SchemaGen {
   def main(args: Array[String]): Unit = {
     args match {
       case Array(_) | Array(_, _) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .appName("graft-schemagen")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = graft.LocalSpark.session(master = sys.env.get("SPARK_MASTER"))
         try println(hiveScript(spark, args(0), if (args.length > 1) args(1) else "data"))
         finally spark.stop()
       case _ =>

@@ -2,17 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for all suites (sbt forks one test JVM). */
+/** One shared local SparkSession for all suites (sbt forks one test JVM):
+ *  four threads and four shuffle partitions on any host, whatever the
+ *  environment asks of the entry points. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSpark.session(cpus = 4, shuffle = Some(4))
 }

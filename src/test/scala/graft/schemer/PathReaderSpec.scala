@@ -230,22 +230,12 @@ class PathReaderSpec extends AnyFunSuite {
 object PathReaderRestart {
   def main(args: Array[String]): Unit = {
     import org.apache.spark.SparkContext
-    import org.apache.spark.sql.SparkSession
     import java.lang.ref.WeakReference
-    // Hadoop starts a statistics cleaner thread on the first file system
-    // use; started while a session is active, it would inherit that session
-    // and keep its context reachable for good
-    org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
-    def session() = SparkSession.builder().master("local[1]").appName("restart")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    def session() = graft.LocalSpark.session(cpus = 1)
     def first(): (Witness, WeakReference[SparkContext]) = {
       val s = session()
-      s.sparkContext.setLogLevel("ERROR")
       val w = InferSchema.inferPath(s, args(0))
-      s.stop()
-      // the next context's threads inherit this thread's active session
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      graft.LocalSpark.stop(s)
       (w, new WeakReference(s.sparkContext))
     }
     val (w, stopped) = first()

@@ -1,22 +1,13 @@
 #!/bin/bash
-# Regenerate the deterministic ScaleGen corpora (wiped at round close;
-# data/ is gitignored): sf10 = sf0.1 x 100, sf100 = sf0.1 x 1000.
-cd /root/repo
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+# Regenerate the deterministic ScaleGen corpora (data/ is gitignored) from an
+# sf0.1 testdata directory: sf10 = sf0.1 x 100, sf100 = sf0.1 x 1000.
+# Usage (after `sbt compile`): tools/regen_scaled_data.sh <sf0.1 dir>
 set -e
-java -Xmx24g $OPENS -Dspark.ui.enabled=false \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.ScaleGen \
-  /root/testdata/sf0.1 data/sf10 100
+src="$(cd "${1:?usage: tools/regen_scaled_data.sh <sf0.1 dir>}" && pwd)"
+cd "$(dirname "$0")/.."
+export SPARK_DRIVER_MEM=24g
+tools/run_graft.sh graft.ScaleGen "$src" data/sf10 100
 echo "=== sf10 done at $(date -u) ==="
-java -Xmx24g $OPENS -Dspark.ui.enabled=false \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.ScaleGen \
-  /root/testdata/sf0.1 data/sf100 1000
+tools/run_graft.sh graft.ScaleGen "$src" data/sf100 1000
 echo "=== sf100 done at $(date -u) ==="
 du -sh data/sf10 data/sf100
