@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,60 +40,18 @@ object Bench {
       "lineitem", "events", "documents", "embeddings")) {
       try spark.read.parquet(s"$sfDir/$t.parquet")
         .selectExpr("count(xxhash64(struct(*)))").collect()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) => System.err.println(s"BENCH WARMUP FAILED: $t -> $e") }
     }
     // failed queries are still timed (the driver wants a total) but NEVER
     // silently: a failure at a new scale factor must show up as data, not
     // as a plausible-looking duration
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Family-boundary artifact release for bounded-scratch hosts
-    // (SPARK_GRAFT_RELEASE_PER_FAMILY=1): a memoized DatasetBridge
-    // snapshot keeps its LINEAGE, which pins the entire build shuffle
-    // chain on disk for the memo's lifetime — across 248 queries at sf100
-    // the pinned dead spill grew past this box's ~94 GB volume twice
-    // (ENOSPC mid-dedup both runs). Releasing at query-family boundaries
-    // bounds resident scratch to one family's artifact set while keeping
-    // the within-family sharing that the cost model documents; on a real
-    // cluster with TB-scale executor scratch the flag stays off.
-    val releasePerFamily = sys.env.get("SPARK_GRAFT_RELEASE_PER_FAMILY").contains("1")
-    // Disk-pressure release (SPARK_GRAFT_MIN_FREE_GB=n): even within one
-    // family, the lineage-pinned artifact set plus a single heavyweight
-    // query's ~25 GB transient spill can overrun a small scratch volume
-    // (attempt 3 still ENOSPC'd mid-dedup with family releases alone).
-    // When free space under the shuffle dir falls below the floor, drop
-    // every memo before the next query — the query rebuilds exactly the
-    // artifacts it needs with the whole volume available. Spill-aware
-    // scheduling, not a cost-model change; off unless set.
-    val minFreeBytes = sys.env.get("SPARK_GRAFT_MIN_FREE_GB").map(_.toLong * (1L << 30))
-    val tmpStore = java.nio.file.Files.getFileStore(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp")))
-    var prevFamily = ""
     val results = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    // Family exemption for capacity campaigns (SPARK_GRAFT_SKIP_PREFIX=
-    // "stream" or a comma list): the sf100 cost model documents that a
-    // replay-fed stream query's scaled number would only measure the
-    // benchmark's own replay build, which continuous production streams
-    // never pay — so the campaign exempts the family EXPLICITLY (named in
-    // the log and visible as absent keys) instead of paying a ~half-hour
-    // artifact build that measures nothing. Off unless set; the driver's
-    // per-round sf0.1 bench never sets it.
-    val skipPrefixes = sys.env.get("SPARK_GRAFT_SKIP_PREFIX")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    val (skipped, toRun) = SparkEntry.queries.toSeq.sortBy(_._1)
-      .partition { case (n, _) => skipPrefixes.exists(n.startsWith) }
-    if (skipped.nonEmpty) System.err.println(
-      s"BENCH SKIPPED (${skipPrefixes.mkString(",")}): ${skipped.map(_._1).mkString(" ")}")
-    val queryIter = toRun.iterator
+    val queryIter = SparkEntry.queries.toSeq.sortBy(_._1).iterator
+    var lastQuery = ""
     while (queryIter.hasNext && !spark.sparkContext.isStopped) {
       val (name, fn) = queryIter.next()
-      val family = name.takeWhile(_ != '_')
-      val familyChanged = family != prevFamily && prevFamily.nonEmpty
-      val diskLow = minFreeBytes.exists(_ > tmpStore.getUsableSpace)
-      if ((releasePerFamily && familyChanged) || diskLow) {
-        CorpusCaches.releaseAll()
-        System.gc()
-      }
-      prevFamily = family
+      lastQuery = name
       // live attribution for capacity campaigns: the suite logs nothing
       // per-query otherwise, so an ENOSPC burst in a 4-hour stderr stream
       // can only be tied to a query by this line's timestamp
@@ -138,14 +98,11 @@ object Bench {
         s"BENCH DONE: $name ${BenchFormat.fmt(sec, 2)}s at ${java.time.Instant.now()}")
       results += (name -> sec)
       // Reap each sink query's round-trip scratch the moment its min-of-two
-      // completes: the family's outputs total ~16 GB at sf100, and in
-      // attempt 12 they landed on a volume whose free-space floor was
-      // already ~13 GB (dead snapshot lineage from earlier families —
-      // the flags that bound that floor had been dropped since attempt 7)
-      // and ran it dry: three sink writes ENOSPC'd and their poisoned
-      // write memos broke the in-suite retries. Per-query reaping bounds
-      // the family's resident scratch to the single largest output;
-      // nothing outside the family reads these directories.
+      // completes: the family's outputs total ~16 GB at sf100, and sink
+      // writes that ran a scratch volume dry poisoned their write memos and
+      // broke the in-suite retries. Per-query reaping bounds the family's
+      // resident scratch to the single largest output; nothing outside the
+      // family reads these directories.
       if (name.startsWith("sink_")) graft.sources.Sinks.cleanup(spark)
     }
     // A dying SparkContext (executor OOM kill, shutdown hook, operator kill)
@@ -155,7 +112,7 @@ object Bench {
     // loop, mark the abort explicitly, and let the partial JSON land.
     if (queryIter.hasNext) {
       val unrun = queryIter.size
-      errors("_aborted") = s"SparkContext stopped in the ${prevFamily} family; $unrun queries unrun"
+      errors("_aborted") = s"SparkContext stopped after $lastQuery; $unrun queries unrun"
       System.err.println(s"BENCH ABORTED: ${errors("_aborted")} at ${java.time.Instant.now()}")
     }
     val total = results.map(_._2).sum
@@ -165,7 +122,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (BenchFormat.fullLine(total, results.toSeq, sfDir, errors.toSeq, Some(calib)) + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) => System.err.println(s"BENCH WRITE FAILED: $e") }
     errors.foreach { case (q, e) => System.err.println(s"BENCH QUERY FAILED: $q -> $e") }
     println(line)
     spark.stop()

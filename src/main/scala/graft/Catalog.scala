@@ -4,33 +4,13 @@ package graft
  *  live SparkEntry inventory, so the docs can never drift from the code. */
 object Catalog {
   def main(args: Array[String]): Unit = {
-    val modules: Seq[(String, Vector[Tables.QueryDef])] = Seq(
-      "Relational 1" -> graft.operators.RelationalQueries.defs,
-      "Relational 2" -> graft.operators.RelationalQueries2.defs,
-      "As-of & sketch" -> graft.operators.AsofAndSketch.defs,
-      "Joins & set ops" -> graft.operators.JoinsAndSetOps.defs,
-      "Sessions & skew" -> graft.operators.SessionAndSkew.defs,
-      "Sweep & skyline" -> graft.operators.SweepSkyline.defs,
-      "Graph" -> graft.operators.GraphOps.defs,
-      "Sinks" -> graft.sources.Sinks.defs,
-      "Schema inference" -> graft.operators.SchemerQueries.defs,
-      "Text analysis" -> graft.operators.TextQueries.defs,
-      "Curation pipeline" -> graft.operators.CurationPipeline.defs,
-      "Training ops" -> graft.operators.TrainingOps.defs,
-      "Deduplication" -> graft.dedup.Dedup.defs,
-      "Similarity search" -> graft.similarity.Ann.defs,
-      "Multimodal" -> graft.multimodal.Media.defs,
-      "Streaming" -> graft.streaming.EventStreams.defs)
-    var i = 0
+    val defs = SparkEntry.modules.flatMap { case (mod, ds) => ds.map(mod -> _) }
     println("| # | Query | Module | Oracle |")
     println("|---|---|---|---|")
-    for ((mod, defs) <- modules; d <- defs) {
-      i += 1
+    for (((mod, d), i) <- defs.zipWithIndex) {
       val oracle = if (d.oracle.isDefined) "DuckDB hash" else "rows-only + spec"
-      println(s"| $i | `${d.name}` | $mod | $oracle |")
+      println(s"| ${i + 1} | `${d.name}` | $mod | $oracle |")
     }
-    val total = modules.map(_._2.size).sum
-    val oracled = modules.flatMap(_._2).count(_.oracle.isDefined)
-    println(s"\n$total queries, $oracled with DuckDB oracles")
+    println(s"\n${defs.size} queries, ${defs.count(_._2.oracle.isDefined)} with DuckDB oracles")
   }
 }

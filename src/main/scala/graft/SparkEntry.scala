@@ -11,24 +11,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * MinHash/SimHash signatures, ANN rankings, …). */
 object SparkEntry {
 
+  /** Every query module with its catalog label (README §5, [[Catalog]]). */
+  lazy val modules: Vector[(String, Vector[QueryDef])] = Vector(
+    "Relational 1" -> graft.operators.RelationalQueries.defs,
+    "Relational 2" -> graft.operators.RelationalQueries2.defs,
+    "As-of & sketch" -> graft.operators.AsofAndSketch.defs,
+    "Joins & set ops" -> graft.operators.JoinsAndSetOps.defs,
+    "Sessions & skew" -> graft.operators.SessionAndSkew.defs,
+    "Sweep & skyline" -> graft.operators.SweepSkyline.defs,
+    "Graph" -> graft.operators.GraphOps.defs,
+    "Sinks" -> graft.sources.Sinks.defs,
+    "Schema inference" -> graft.operators.SchemerQueries.defs,
+    "Text analysis" -> graft.operators.TextQueries.defs,
+    "Curation pipeline" -> graft.operators.CurationPipeline.defs,
+    "Training ops" -> graft.operators.TrainingOps.defs,
+    "Deduplication" -> graft.dedup.Dedup.defs,
+    "Similarity search" -> graft.similarity.Ann.defs,
+    "Multimodal" -> graft.multimodal.Media.defs,
+    "Streaming" -> graft.streaming.EventStreams.defs)
+
   /** All query modules, concatenated. Names must stay unique. */
-  private lazy val allDefs: Vector[QueryDef] =
-    graft.operators.RelationalQueries.defs ++
-    graft.operators.RelationalQueries2.defs ++
-    graft.operators.AsofAndSketch.defs ++
-    graft.operators.JoinsAndSetOps.defs ++
-    graft.operators.SessionAndSkew.defs ++
-    graft.operators.SweepSkyline.defs ++
-    graft.operators.GraphOps.defs ++
-    graft.sources.Sinks.defs ++
-    graft.operators.SchemerQueries.defs ++
-    graft.operators.TextQueries.defs ++
-    graft.operators.CurationPipeline.defs ++
-    graft.operators.TrainingOps.defs ++
-    graft.dedup.Dedup.defs ++
-    graft.similarity.Ann.defs ++
-    graft.multimodal.Media.defs ++
-    graft.streaming.EventStreams.defs
+  private lazy val allDefs: Vector[QueryDef] = modules.flatMap(_._2)
 
   /** Flagship: the schema-inference engine end-to-end on sf0.001 — the
    *  unified Hive DDL of the events.props JSON column as a 1-row frame. */

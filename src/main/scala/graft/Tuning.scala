@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
-/** Storage-level dials for the engine's two kinds of materialization.
+/** Storage levels for the engine's two kinds of materialization.
  *
  *  SNAPSHOTS (per-corpus shared artifacts: shingle index, trained
  *  centroids, edge lists — [[org.apache.spark.sql.graft.DatasetBridge]])
@@ -12,23 +12,17 @@ import org.apache.spark.storage.StorageLevel
  *  between the suite finishing and OOMing a 16g heap.
  *
  *  INTRA-QUERY persist barriers (shared shuffles, two-pass ranks,
- *  both-sides-of-a-join frames) read `SPARK_GRAFT_PERSIST_LEVEL` and
- *  deliberately default to MEMORY_AND_DISK even when snapshots are
- *  disk-backed. Measured at sf100 (600M lineitem, 48g JVM, one disk):
- *  forcing q64's 150M-row basket barrier to DISK_ONLY made it ~35%
- *  SLOWER (316/447 s vs 255/324) — DataFrame cache is compressed
+ *  both-sides-of-a-join frames) are always MEMORY_AND_DISK, even when
+ *  snapshots are disk-backed. Measured at sf100 (600M lineitem, 48g JVM,
+ *  one disk): forcing q64's 150M-row basket barrier to DISK_ONLY made it
+ *  ~35% SLOWER (316/447 s vs 255/324) — DataFrame cache is compressed
  *  columnar batches, so the heap cost of MEMORY_AND_DISK is modest and
  *  the extra disk round-trip just adds contention on the same spindle
- *  the shuffles spill to. The dial exists for deployments where executor
- *  storage memory is the scarce resource; it is not a latency win on a
- *  single box.
+ *  the shuffles spill to.
  */
 object Tuning {
-  private def level(envVar: String): StorageLevel =
-    sys.env.get(envVar)
-      .map(StorageLevel.fromString)
-      .getOrElse(StorageLevel.MEMORY_AND_DISK)
-
-  val snapshotLevel: StorageLevel = level("SPARK_GRAFT_SNAPSHOT_LEVEL")
-  val persistLevel: StorageLevel  = level("SPARK_GRAFT_PERSIST_LEVEL")
+  val snapshotLevel: StorageLevel = sys.env.get("SPARK_GRAFT_SNAPSHOT_LEVEL")
+    .map(StorageLevel.fromString)
+    .getOrElse(StorageLevel.MEMORY_AND_DISK)
+  val persistLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
 }

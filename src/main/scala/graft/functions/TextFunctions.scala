@@ -242,8 +242,6 @@ object TextFunctions {
    *  NULL on length mismatch or null elements (zip_with semantics). */
   def dot(a: Column, b: Column): Column = native2(ArrayDot)(a, b)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity ([[ArrayCosine]]): x·y, x·x, y·y in ONE fused loop;
    *  0 when either vector is all-zero. */
   def cosine(a: Column, b: Column): Column = native2(ArrayCosine)(a, b)

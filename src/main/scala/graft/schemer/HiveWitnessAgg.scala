@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * is the [[Witness]] JVM object itself, mutated in place per row; the
  * compact [[WitnessCodec]] binary form is produced only where a buffer
  * genuinely crosses a boundary (shuffle of partial aggregates, spill,
- * streaming state). The earlier `functions.udaf` + Kryo form re-encoded the
+ * streaming state). A `functions.udaf` over a Kryo buffer re-encodes the
  * buffer on every partial merge; this one plans as ObjectHashAggregate with
  * map-side combine, so at 100 TB the shuffle carries one few-hundred-byte
  * witness per (group × partition).
@@ -45,13 +45,7 @@ trait WitnessFoldAgg extends TypedImperativeAggregate[Witness] with UnaryLike[Ex
     else {
       val doc = v.asInstanceOf[UTF8String]
       if (doc.numBytes == 0) buffer
-      else {
-        try cap(Witness.foldJson(buffer, doc, inferTimestamps = inferTimestamps))
-        catch {
-          case e: RowMismatch if e.row.isEmpty =>
-            throw e.copy(row = Some(Witness.prettyRow(doc.toString)))
-        }
-      }
+      else cap(Witness.foldRow(buffer, doc, inferTimestamps = inferTimestamps))
     }
   }
 

@@ -1,10 +1,8 @@
 package graft.schemer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions
 import org.apache.spark.sql.graft.FileLines
 import org.apache.spark.sql.types.StringType
 
@@ -37,16 +35,8 @@ object InferSchema {
     while (it.hasNext) {
       val doc = it.next().getUTF8String(0)
       rec += 1
-      if (doc != null && doc.numBytes > 0) {
-        // attach the offending document to the diagnostic at the only tier
-        // that still holds the raw line (reference Schemer.scala:19)
-        acc =
-          try Witness.foldJson(acc, doc, s"partition $idx record $rec")
-          catch {
-            case e: RowMismatch if e.row.isEmpty =>
-              throw e.copy(row = Some(Witness.prettyRow(doc.toString)))
-          }
-      }
+      if (doc != null && doc.numBytes > 0)
+        acc = Witness.foldRow(acc, doc, s"partition $idx record $rec")
     }
     Iterator.single(idx -> acc)
   }
@@ -108,43 +98,14 @@ object InferSchema {
 
   // ---- SQL-function form ---------------------------------------------------
 
-  /** Buffer encoder for the recursive Witness ADT: Kryo (SURVEY.md §7.4). */
-  implicit private val witnessEnc: Encoder[Witness] = Encoders.kryo[Witness]
-
-  /** `Aggregator[String, Witness, String]`: feed it a column of JSON strings,
-   *  get the rendered Hive type of their unified schema. The partial+final
-   *  split (reduce per partition, merge across) is exactly the witness
-   *  semilattice, so map-side combine applies and the shuffle carries only
-   *  witnesses. */
-  class HiveTypeAggregator extends Aggregator[String, Witness, String] {
-    def zero: Witness = Witness.bottom
-    def reduce(b: Witness, a: String): Witness =
-      if (a == null || a.isEmpty) b else Witness.foldJson(b, a, "", inferTimestamps = false)
-    def merge(b1: Witness, b2: Witness): Witness = Witness.merge(b1, b2)
-    def finish(r: Witness): String = HiveRender.renderType(r)
-    def bufferEncoder: Encoder[Witness] = witnessEnc
-    def outputEncoder: Encoder[String] = Encoders.STRING
-  }
-
-  /** Same aggregator, finishing to the top-level column-definition block
-   *  (reference `definition`, Schemer.scala:99-105). */
-  class ColumnDefsAggregator extends Aggregator[String, Witness, String] {
-    def zero: Witness = Witness.bottom
-    def reduce(b: Witness, a: String): Witness =
-      if (a == null || a.isEmpty) b else Witness.foldJson(b, a, "", inferTimestamps = false)
-    def merge(b1: Witness, b2: Witness): Witness = Witness.merge(b1, b2)
-    def finish(r: Witness): String = HiveRender.definition(r)
-    def bufferEncoder: Encoder[Witness] = witnessEnc
-    def outputEncoder: Encoder[String] = Encoders.STRING
-  }
-
   /** Column function: unified Hive type of a column of JSON documents.
    *  Usable inside arbitrary queries, e.g.
    *  `events.groupBy($"event_type").agg(infer_hive_type($"props"))`.
    *  Backed by the native [[HiveWitnessAgg]] (TypedImperativeAggregate →
    *  ObjectHashAggregate, buffer serialized only at shuffle/state
-   *  boundaries); the `Aggregator` classes above remain for the typed
-   *  Dataset API and SQL registration. */
+   *  boundaries). SQL reaches the same aggregate by name through
+   *  `org.apache.spark.sql.graft.GraftFunctions.register` or
+   *  `spark.sql.extensions=graft.GraftExtensions`. */
   def infer_hive_type(c: Column): Column = nativeAgg(c, renderDefs = false)
 
   /** Column function: Hive column-definition block of a JSON column. */
@@ -174,11 +135,5 @@ object InferSchema {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       HiveWitnessAgg(ColumnBridge.expression(c), renderDefs, mapThreshold).toAggregateExpression())
-  }
-
-  /** Register both as SQL functions (`infer_hive_type`, `infer_column_defs`). */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("infer_hive_type", functions.udaf(new HiveTypeAggregator))
-    spark.udf.register("infer_column_defs", functions.udaf(new ColumnDefsAggregator))
   }
 }

@@ -36,12 +36,6 @@ object SchemaGen {
     spark.read.schema(schema).json(path)
   }
 
-  /** Script as a 1-row DataFrame (driver smoke-check shape). */
-  def hiveScriptDF(spark: SparkSession, path: String, table: String = "data"): DataFrame = {
-    import spark.implicits._
-    Seq(hiveScript(spark, path, table)).toDF("ddl")
-  }
-
   /** CLI parity: `run file.json [table_name]` → script on stdout
    *  (Generator.scala:4-11). */
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,6 @@
 package graft.schemer
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -117,7 +116,7 @@ final case class RowMismatch(a: Witness, b: Witness, context: String,
     row: Option[String] = None) extends Exception {
   /** Like the reference (Schemer.scala:19, `Json.prettyPrint(b)`), the
    *  offending document itself is printed before the two rendered schemas
-   *  when the row-level fold can attach it ([[InferSchema.foldPartition]]). */
+   *  when the row-level fold can attach it ([[Witness.foldRow]]). */
   override def getMessage: String = (
     row.toSeq.flatMap(r => Seq(s"$context: failed to merge the row:", r)) ++ Seq(
       s"$context: attempted to merge a value with schema:",
@@ -228,7 +227,7 @@ object Witness {
   /** Pretty-print a raw NDJSON line for diagnostics (reference prints the
    *  offending document with `Json.prettyPrint`, Schemer.scala:19). Falls
    *  back to the raw line if it does not re-parse. */
-  def prettyRow(line: String): String =
+  private def prettyRow(line: String): String =
     try mapper.readTree(line).toPrettyString catch { case _: Exception => line }
 
   /** Parse one NDJSON line into its witness. Malformed JSON throws
@@ -253,17 +252,14 @@ object Witness {
     try WitnessScan(acc, doc.getBaseObject, doc.getBaseOffset, doc.numBytes, inferTimestamps)
     catch { case WitnessScan.Fallback => merge(acc, ofJson(doc.toString, context, inferTimestamps), context) }
 
-  /** [[foldJson]] over a line already decoded to a String (the typed
-   *  Aggregators' input): encoded once and scanned; a line holding an
-   *  unpaired surrogate has no UTF-8 form and goes to the tree path, which
-   *  also takes the original String on every other fallback. */
-  def foldJson(acc: Witness, line: String, context: => String, inferTimestamps: Boolean): Witness = {
-    def tree = merge(acc, ofJson(line, context, inferTimestamps), context)
-    val bytes = WitnessScan.utf8(line)
-    if (bytes == null) tree
-    else try WitnessScan(acc, bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, inferTimestamps)
-    catch { case WitnessScan.Fallback => tree }
-  }
+  /** [[foldJson]] of one row of a fold site (the partition fold, the native
+   *  aggregate): a row-level [[RowMismatch]] also carries the offending
+   *  document, pretty-printed, as the reference prints it
+   *  (Schemer.scala:19). Only this tier still holds the raw line. */
+  def foldRow(acc: Witness, doc: UTF8String, context: => String = "",
+      inferTimestamps: Boolean = false): Witness =
+    try foldJson(acc, doc, context, inferTimestamps)
+    catch { case e: RowMismatch if e.row.isEmpty => throw e.copy(row = Some(prettyRow(doc.toString))) }
 
   // ---- flagged ISO-8601 recognition ---------------------------------------
 

@@ -90,7 +90,7 @@ private[schemer] object WitnessScan {
 
   /** UTF-8 of `s`, or null when `s` holds an unpaired surrogate (which
    *  `getBytes` would silently turn into `?`). */
-  def utf8(s: String): Array[Byte] = {
+  private[schemer] def utf8(s: String): Array[Byte] = {
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)

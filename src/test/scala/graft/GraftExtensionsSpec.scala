@@ -43,6 +43,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(defs.contains("a FLOAT") && defs.contains("b VARCHAR(1)"))
   }
 
+  test("the SQL witness functions bind to the native aggregates") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    for ((fn, native) <- Seq(
+        "infer_hive_type" -> classOf[graft.schemer.HiveWitnessAgg],
+        "infer_column_defs" -> classOf[graft.schemer.HiveWitnessAgg],
+        "infer_column_types" -> classOf[graft.schemer.WitnessColumnsAgg])) {
+      val df = spark.sql(s"""SELECT $fn(v) FROM VALUES ('{"a": 1}'), ('{"b": "x"}') AS t(v)""")
+      val bound = df.queryExecution.analyzed.expressions
+        .flatMap(_.collect { case a: AggregateExpression => a.aggregateFunction.getClass })
+      assert(bound == Seq(native), s"$fn bound to $bound")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("ObjectHashAggregate"), s"$fn planned as:\n$plan")
+    }
+  }
+
   test("minhash_sig rejects a non-literal k") {
     val e = intercept[Exception] {
       spark.sql("SELECT minhash_sig(array(1L), cast(rand()*4 as int))").collect()

@@ -65,7 +65,7 @@ class InferSchemaSpec extends AnyFunSuite {
   }
 
   test("infer_hive_type is registered for SQL") {
-    InferSchema.register(spark)
+    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import spark.implicits._
     Seq("""{"x": true}""", """{"y": "ab"}""").toDF("j").createOrReplaceTempView("jrows")
     val t = spark.sql("SELECT infer_hive_type(j) AS t FROM jrows").collect()(0).getString(0)

@@ -1,5 +1,6 @@
 package graft.schemer
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,13 +114,13 @@ class RenderSpec extends AnyFunSuite {
   }
 
   private def fold(lines: String*): Witness =
-    lines.foldLeft(WObj.empty: Witness)(Witness.foldJson(_, _, "ctx", inferTimestamps = false))
+    lines.foldLeft(WObj.empty: Witness)((acc, l) => Witness.foldJson(acc, UTF8String.fromString(l), "ctx"))
 
   test("a scale no number can be widened to still renders, and its mismatch message builds") {
     val tiny = fold("""{"x":1e-999999999}""", """{"x":5}""")
     assert(HiveRender.definition(tiny) == "x NUMERIC(1000000000, 999999999)")
     assert(HiveRender.toSparkSchema(tiny).head.dataType == org.apache.spark.sql.types.DecimalType(38, 38))
-    val e = intercept[RowMismatch](Witness.foldJson(tiny, """{"x":[1]}""", "ctx", inferTimestamps = false))
+    val e = intercept[RowMismatch](Witness.foldJson(tiny, UTF8String.fromString("""{"x":[1]}"""), "ctx"))
     assert(e.getMessage.contains("NUMERIC(1000000000, 999999999)"), e.getMessage)
     val huge = fold("""{"x":1e999999999}""", """{"x":5}""")
     assert(HiveRender.definition(huge) == "x NUMERIC(1000000000, 0)")

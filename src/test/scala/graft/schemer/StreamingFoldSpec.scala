@@ -50,8 +50,6 @@ class StreamingFoldSpec extends AnyFunSuite {
     val expected = tree(acc, line, ts)
     val actual = stream(acc, line.getBytes(UTF_8), ts)
     assert(same(expected, actual), s"\n  acc:  ${brief(acc)}\n  line: ${brief(line)}\n  tree: ${brief(expected)}\n  fold: ${brief(actual)}")
-    val decoded = outcome(Witness.foldJson(acc, line, "ctx", ts))
-    assert(same(expected, decoded), s"\n  acc:  ${brief(acc)}\n  line: ${brief(line)}\n  tree: ${brief(expected)}\n  fold(String): ${brief(decoded)}")
     expected.getOrElse(acc)
   }
 
@@ -251,7 +249,7 @@ class StreamingFoldSpec extends AnyFunSuite {
     }
   }
 
-  test("byte mutations of generated documents: scan ≡ tree, both overloads") {
+  test("byte mutations of generated documents: scan ≡ tree") {
     val rnd = new scala.util.Random(11)
     var checked = 0
     samples(Gen.listOfN(20, genObject(3)), 120).zipWithIndex.foreach { case (seq, i) =>
@@ -266,8 +264,6 @@ class StreamingFoldSpec extends AnyFunSuite {
           val scanned = stream(acc, bytes, ts)
           assert(same(expected, scanned),
             s"\n  acc:   ${brief(acc)}\n  bytes: ${bytes.map(b => f"${b & 0xff}%02x").mkString(" ")}\n  tree:  ${brief(expected)}\n  scan:  ${brief(scanned)}")
-          val fromString = outcome(Witness.foldJson(acc, decoded, "ctx", ts))
-          assert(same(expected, fromString), s"\n  acc:  ${brief(acc)}\n  line: ${brief(decoded)}\n  tree: ${brief(expected)}\n  scan(String): ${brief(fromString)}")
           checked += 1
         }
         tree(running, line, ts).getOrElse(running)
@@ -470,21 +466,12 @@ class StreamingFoldSpec extends AnyFunSuite {
     }
   }
 
-  test("lone surrogates: escaped in the JSON text, and raw in the String overload") {
+  test("lone surrogates escaped in the JSON text") {
     val (hi, lo) = (esc("d800"), esc("dc00"))
     for (acc <- Seq(WNull, WObj.empty, check(WObj.empty, """{"k?":1,"s":"abc"}""")))
       checkAll(acc, s"""{"s":"$hi"}""", s"""{"s":"${lo}x${esc("d83d")}"}""", s"""{"k$hi":1}""", s"""{"k?":2,"k$hi":1}""")
     val named = check(WObj.empty, s"""{"k$hi":1}""")
     checkAll(named, """{"k?":"x"}""", s"""{"k$hi":2}""", s"""{"k$hi":"x"}""")
-    // raw unpaired surrogates: `getBytes` would turn each into `?`
-    for (acc <- Seq(WNull, WObj.empty, named, check(WObj.empty, """{"k?":1,"s":"a"}"""));
-        line <- Seq("{\"s\":\"a\ud800b\"}", "{\"s\":\"\udc00\"}", "{\"k\ud800\":1}", "{\"k?\":\"\ud800\"}",
-          "{\"s\":\"\ud83d\ude00\"}", "{\"s\":1}\ud800", "\ud800{\"s\":1}", "{\"s\":\ud800}", "{\"s\"\udbff:1}")) {
-      assert(line.exists(Character.isSurrogate))
-      val expected = tree(acc, line, ts = false)
-      val actual = outcome(Witness.foldJson(acc, line, "ctx", inferTimestamps = false))
-      assert(same(expected, actual), s"\n  acc: ${brief(acc)}\n  line: ${brief(line)}\n  tree: ${brief(expected)}\n  scan(String): ${brief(actual)}")
-    }
   }
 
   private val strictMapper = new com.fasterxml.jackson.databind.ObjectMapper()

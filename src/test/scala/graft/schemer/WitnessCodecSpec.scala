@@ -7,8 +7,8 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native witness aggregate and its shuffle codec: byte-exact
- *  round-trips for arbitrary witnesses, equivalence with the udaf form,
- *  and the ObjectHashAggregate plan shape. */
+ *  round-trips for arbitrary witnesses, equivalence per group with the
+ *  tree path (`ofJson` + `merge`), and the ObjectHashAggregate plan shape. */
 class WitnessCodecSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -56,22 +56,27 @@ class WitnessCodecSpec extends AnyFunSuite {
     assert(back.precision == w.precision && back.maxScale == 7)
   }
 
-  test("native aggregate equals the udaf form and plans as ObjectHashAggregate") {
+  test("native ObjectHashAggregate equals the tree-path fold per group") {
     import spark.implicits._
-    val docs = Seq(
+    val rows = Seq(
       (1L, """{"a": 1, "b": "xy"}"""),
       (1L, """{"a": 2.5, "c": [1, 2]}"""),
       (2L, """{"nested": {"p": true}}"""),
       (2L, null.asInstanceOf[String]),
-      (3L, "")).toDF("g", "doc")
+      (3L, ""))
+    val docs = rows.toDF("g", "doc")
     val native = docs.groupBy("g").agg(InferSchema.infer_hive_type(col("doc")).as("t"))
-    val viaUdaf = docs.groupBy("g")
-      .agg(org.apache.spark.sql.functions.udaf(new InferSchema.HiveTypeAggregator).apply(col("doc")).as("t"))
-    assert(native.orderBy("g").collect().toSeq == viaUdaf.orderBy("g").collect().toSeq)
+    // the reference form: each group's non-empty documents parsed to a tree
+    // and merged in row order, from the bottom witness
+    val viaTree = rows.groupBy(_._1).map { case (g, gs) =>
+      g -> HiveRender.renderType(gs.map(_._2).filter(d => d != null && d.nonEmpty)
+        .foldLeft(Witness.bottom)((acc, d) => Witness.merge(acc, Witness.ofJson(d))))
+    }
+    val byG = native.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(byG == viaTree)
     val plan = native.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), s"expected ObjectHashAggregate in:\n$plan")
     // empty group / all-null group renders the unknown marker, not a crash
-    val byG = native.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(byG(3L) == "???")
     assert(byG(1L).startsWith("STRUCT<"))
   }
