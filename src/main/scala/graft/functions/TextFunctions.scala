@@ -24,19 +24,13 @@ object TextFunctions {
 
   /** Token count without materializing the token array — single-pass
    *  native byte scan ([[TokenCountExpr]], r12), bit-identical to the
-   *  length-arithmetic column form it replaced ([[tokenCountColumnForm]],
-   *  kept as the oracle-expressible reference and pinned by CharStatSpec).
-   *  Counts single-space-separated words (the corpus format). */
+   *  length-arithmetic column form it replaced (kept in the test tree as
+   *  the oracle-expressible reference, `TextColumnForms`, and pinned by
+   *  CharStatSpec). Counts single-space-separated words (the corpus format). */
   def tokenCount(text: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(TokenCountExpr(ColumnBridge.expression(text)))
   }
-
-  /** The pre-r12 column form of [[tokenCount]] — plain length arithmetic,
-   *  expressible in any SQL oracle; the spec pins the native twin to it. */
-  private[graft] def tokenCountColumnForm(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(length(trim(text)) - length(translate(trim(text), " ", "")) + 1)
 
   /** BPE-ish subword count heuristic: word pieces after splitting on
    *  non-alphanumerics plus intra-word splits every 4 chars — a cheap,
@@ -96,34 +90,15 @@ object TextFunctions {
    *  for len ≤ 10¹⁶ — the ratio can never fall within 5.5e-18 above 0.1),
    *  and the word-length gate uses the exact `(nonspace·100) div ntok`. */
   def qualityBp(text: Column): Column = {
-    // single-pass native byte scan (r12): the column tree below evaluates
-    // trim/translate/length chains that each copy the document — measured
-    // 9.5-11.9 s of a 0.9 s-floor sf10 corpus scan, the largest CPU term
-    // in the pipeline/text families. CharStatSpec pins bit-equality of
-    // QualityBpExpr against this form, which stays as the reference (and
-    // the shape the DuckDB oracle twins replicate).
+    // single-pass native byte scan (r12): the column tree it replaced
+    // evaluates trim/translate/length chains that each copy the document —
+    // measured 9.5-11.9 s of a 0.9 s-floor sf10 corpus scan, the largest
+    // CPU term in the pipeline/text families. CharStatSpec pins
+    // bit-equality of QualityBpExpr against that tree, which stays in the
+    // test tree (`TextColumnForms`) as the reference (and the shape the
+    // DuckDB oracle twins replicate).
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(QualityBpExpr(ColumnBridge.expression(text)))
-  }
-
-  /** The pre-r12 column form of [[qualityBp]] — the oracle-expressible
-   *  reference the spec pins the native twin to. */
-  private[graft] def qualityBpColumnForm(text: Column): Column = {
-    def idiv(a: Column, b: Column): Column = call_function("div", a, b)
-    val ntok = tokenCountColumnForm(text).cast("long")
-    val len1 = greatest(length(text).cast("long"), lit(1L))
-    val nonspace = length(translate(trim(text), " ", "")).cast("long")
-    val m = when(ntok === 0L, 0L).otherwise(idiv(nonspace * 100L, ntok))
-    val wordBp = when(m.between(300L, 1000L), 2000L).otherwise(800L)
-    val punctBp = when(punctCount(text).cast("long") * 10L <= len1, 2000L).otherwise(600L)
-    // native byte-scan twin of length(regexp_replace(text,'[^a-zA-Z ]',''))
-    // — the regexp was 96% of a full-corpus quality scan (see CharStat)
-    val alpha = org.apache.spark.sql.graft.ColumnBridge.column(
-      AlphaSpaceCountExpr(org.apache.spark.sql.graft.ColumnBridge.expression(text)))
-    val num = lit(4000L) * least(ntok, lit(64L)) * len1 +
-      (wordBp + punctBp) * 64L * len1 + lit(2000L) * alpha * 64L
-    val den = lit(64L) * len1
-    idiv(num * 2L + den, den * 2L)
   }
 
   /** [[qualityBp]] as a [0,1] double — presentation form only; every

@@ -60,7 +60,9 @@ object InferSchema {
   /** Infer from an NDJSON file/directory path (reference O1: file scan).
    *  Folds the same partitions and lines as
    *  `inferWitness(spark.read.textFile(path))`, read straight from the
-   *  file scan ([[FileLines]]). */
+   *  file scan ([[FileLines]]): an uncompressed split's lines are found in
+   *  the read buffer and folded where they lie, without Hadoop's line
+   *  reader or a copy; a compressed file is read through Hadoop's. */
   def inferPath(spark: SparkSession, path: String): Witness =
     fold(FileLines(spark, path))
 

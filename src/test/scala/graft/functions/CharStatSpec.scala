@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The r12 fused single-pass text stats (QualityBpExpr / TokenCountExpr)
  *  must be BIT-IDENTICAL to the column trees they replaced — those trees
- *  stay in TextFunctions as the oracle-expressible reference forms. The
- *  generator covers the adversarial cases the byte-scan must get right:
+ *  stay in the test tree ([[TextColumnForms]]) as the oracle-expressible
+ *  reference forms. The generator covers the adversarial cases the
+ *  byte-scan must get right:
  *  empty, all-space, leading/trailing space runs, consecutive interior
  *  spaces, tabs/newlines (NOT trimmed by Spark's trim), multi-byte UTF-8
  *  (must count as one char, never alias an ASCII class), punctuation
@@ -35,9 +36,9 @@ class CharStatSpec extends AnyFunSuite {
     val df = (corners ++ randomDocs(300)).toDF("text")
     val out = df.select(
       TextFunctions.qualityBp(col("text")).as("q_native"),
-      TextFunctions.qualityBpColumnForm(col("text")).as("q_col"),
+      TextColumnForms.qualityBpColumnForm(col("text")).as("q_col"),
       TextFunctions.tokenCount(col("text")).as("t_native"),
-      TextFunctions.tokenCountColumnForm(col("text")).as("t_col"))
+      TextColumnForms.tokenCountColumnForm(col("text")).as("t_col"))
       .collect()
     out.foreach { r =>
       assert(r.getLong(0) == r.getLong(1), s"qualityBp diverged: $r")

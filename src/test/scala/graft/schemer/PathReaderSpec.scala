@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.FileLines
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.ByteArrayOutputStream
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
@@ -213,6 +213,68 @@ class PathReaderSpec extends AnyFunSuite {
     assert(finished && child.exitValue == 0, out)
     assert(out.linesIterator.contains("same witness: true"), out)
     assert(out.linesIterator.contains("stopped context released: true"), out)
+  }
+
+  test("every split size cuts small files on every byte: CR, LF, inside a CRLF and inside the BOM") {
+    val bom = new String(Bom, ISO_8859_1)
+    val files = Seq(
+      "lf" -> "{\"a\":1}\n\n{\"bb\":22}\nc\n",
+      "cr" -> "{\"a\":1}\r\r{\"bb\":22}\rc\r",
+      "crlf" -> "{\"a\":1}\r\n\r\n{\"bb\":22}\r\nc\r\n",
+      "mixed" -> "a\r\nb\rc\n\r\n\n\rd\r\r\ne",
+      "bom" -> s"$bom{\"a\":1}\r\n${bom}b\n",
+      "bom only" -> bom,
+      "no final line end" -> "ab\ncd",
+      "only line ends" -> "\r\n\r\r\n\n\n\r",
+      "empty" -> "")
+    val dir = Files.createTempDirectory("graft_path_reader_cuts")
+    for (((name, text), i) <- files.zipWithIndex) {
+      val bytes = text.getBytes(ISO_8859_1)
+      write(dir, s"$i.txt", bytes)
+      val path = dir.resolve(s"$i.txt").toString
+      // one split per maxPartitionBytes bytes: with a 1-byte open cost and
+      // one minimum partition, maxSplitBytes is maxPartitionBytes
+      for (max <- 1 to math.max(bytes.length, 1)) {
+        spark.conf.set("spark.sql.files.maxPartitionBytes", max.toLong)
+        spark.conf.set("spark.sql.files.openCostInBytes", 1L)
+        spark.conf.set("spark.sql.files.minPartitionNum", 1L)
+        try assert(partitions(FileLines(spark, path)) == partitions(InferSchema.lines(spark.read.textFile(path))),
+          s"$name at maxPartitionBytes $max")
+        finally Seq("maxPartitionBytes", "openCostInBytes", "minPartitionNum")
+          .foreach(k => spark.conf.unset(s"spark.sql.files.$k"))
+      }
+    }
+  }
+
+  test("input metrics: the records and bytes spark.read.textFile reports") {
+    val dir = Files.createTempDirectory("graft_path_reader_metrics")
+    val bytes = ndjson("a", 30, "\n", blankEvery = 4) ++ ndjson("b", 12, "\r\n")
+    write(dir, "a.json", bytes)
+    val path = dir.resolve("a.json").toString
+    // (records, bytes) summed over the tasks of one read, counted once all
+    // of its tasks have ended
+    def metrics(rows: RDD[InternalRow]): (Long, Long) = {
+      val tasks = new java.util.concurrent.LinkedBlockingQueue[(Long, Long)]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(end: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          val in = end.taskMetrics.inputMetrics
+          tasks.put(in.recordsRead -> in.bytesRead)
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        rows.foreach(_ => ())
+        val counts = Seq.fill(rows.getNumPartitions)(tasks.poll(1, java.util.concurrent.TimeUnit.MINUTES))
+        assert(!counts.contains(null), "a task end did not arrive")
+        counts.map(_._1).sum -> counts.map(_._2).sum
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    for (conf <- Configs) withSplits(conf) {
+      val (records, read) = metrics(FileLines(spark, path))
+      val (expected, _) = metrics(InferSchema.lines(spark.read.textFile(path)))
+      assert(records == expected && records > 0, s"recordsRead at $conf")
+      assert(read >= bytes.length, s"bytesRead $read of a ${bytes.length}-byte file at $conf")
+    }
   }
 
   test("a conflicting row names the same partition and record") {
