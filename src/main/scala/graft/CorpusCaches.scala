@@ -44,7 +44,7 @@ object CorpusCaches {
       catch { case t: Throwable => cells.remove(k, cell); throw t }
     }
 
-    private[CorpusCaches] def clear(): Unit = cells.clear()
+    private[graft] def clear(): Unit = cells.clear()
   }
 
   /** A memo whose value is a [[DatasetBridge.snapshot]] of the build. */
@@ -66,9 +66,11 @@ object CorpusCaches {
   def snapshots[K](truncateLineage: Boolean = false): SnapshotMemo[K] =
     new SnapshotMemo(memo[K, DataFrame](), truncateLineage)
 
-  /** Drop every memo and release every snapshot's storage. */
+  /** Drop every memo, release every snapshot's storage and delete every
+   *  [[ScratchFiles.output]]. */
   def releaseAll(): Unit = {
     registered.forEach(m => m.clear())
+    ScratchFiles.release()
     DatasetBridge.releaseAll()
   }
 }

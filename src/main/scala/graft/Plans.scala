@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Diagnostic main: prints the formatted physical plan of every SparkEntry
   * query (or the ones named in args) at sf0.001 — the review loop for
   * pushdown/broadcast/codegen health. */
@@ -11,7 +13,7 @@ object Plans {
     for (q <- names; fn <- SparkEntry.queries.get(q)) {
       println(s"########## $q")
       try fn(spark, dir).explain("formatted")
-      catch { case e: Throwable => println(s"(explain failed: ${e.getMessage})") }
+      catch { case NonFatal(e) => System.err.println(s"(explain of $q failed: $e)") }
     }
     spark.stop()
   }

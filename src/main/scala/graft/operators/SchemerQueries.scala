@@ -172,17 +172,12 @@ object SchemerQueries {
    *  Results are cast to width-stable types so the oracle holds at any
    *  scale factor (the inferred integral widths tighten with data range:
    *  SMALLINT event_id at sf0.01, INT at sf0.1). */
-  private val ndjsonDirs = graft.CorpusCaches.memo[String, String]()
   def schemaDrivenRead(spark: SparkSession, dir: String): DataFrame = {
-    val path = ndjsonDirs(spark, dir) {
-      val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_ndjson_" +
-        s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val path = graft.ScratchFiles.output(spark, "schema_driven_read", dir) { out =>
       Tables.events(spark, dir)
         .select(to_json(struct(col("event_id"), col("event_type"), col("user_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))).as("value"))
         .write.mode("overwrite").text(out)
-      graft.ScratchFiles.deleteOnExit(java.nio.file.Paths.get(out))
-      out
     }
     val witness = InferSchema.inferPath(spark, path)
     val schema = graft.schemer.HiveRender.toSparkSchema(witness)

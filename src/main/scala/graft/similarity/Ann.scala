@@ -127,40 +127,14 @@ object Ann {
       (array_position(scores, array_max(scores)) - 1).cast("int"))
   }
 
-  /** JOIN-BASED nearest-centroid assignment — the large-k twin of
-   *  [[assignCells]], returning (vec_id, embedding, cell). The literal-
-   *  array form generates k fused dot loops in ONE codegen'd expression —
-   *  unbeatable at k = 16, but at the √n cell counts the scaled SemDeDup
-   *  needs (k ≈ 450 at 200k vectors) the generated class blows past
-   *  JVM method limits and compilation cost. Here each centroid is a
-   *  broadcast ROW instead: corpus × k scored pairs through one hash
-   *  argmax. Bit-identical scores (same 2·x·c − ‖c‖² with the same
-   *  driver-computed ‖c‖² and the same [[graft.functions.ArrayDot]]
-   *  accumulation) and the same lowest-cell tiebreak
-   *  (`max_by(score, −cid)` ≡ first array maximum) — AssignEquivSpec
-   *  pins the two paths equal. */
-  private[graft] def assignCellsJoin(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cents = broadcast(centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.toSeq, c.map(v => v * v).sum) }.toSeq.toDF("cid", "cl", "nrm"))
-    emb.select(col("vec_id"), col("embedding")).crossJoin(cents)
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        (lit(2.0d) * dot(col("embedding"), col("cl")) - col("nrm")).as("score"))
-      .groupBy("vec_id")
-      .agg(first("embedding").as("embedding"),
-        max_by(col("cid"), struct(col("score"), (-col("cid")).as("nid"))).as("cell"))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-  }
-
   /** MATRIX-EXPRESSION nearest-centroid assignment — all k centroids ride
    *  in one [[graft.functions.NearestCellExpr]] node (plan data, not
    *  code), so assignment is a pure map-side projection at ANY k: no k×
    *  row expansion, no corpus-wide hash argmax, no Janino blowup. Same
-   *  scores, same lowest-cell tiebreak as [[assignCellsJoin]]
-   *  (AssignEquivSpec pins the three paths equal); replacing the join
-   *  form cut ann_knn_graph's assignment stage from 17 s to map-side
-   *  noise at sf10. `l2 = false` scores by plain dot (the kNN-graph /
+   *  2·x·c − ‖c‖² scores, same lowest-cell tiebreak as [[assignCells]]
+   *  (AssignEquivSpec pins the two paths equal); replacing the earlier
+   *  broadcast-join argmax cut ann_knn_graph's assignment stage from 17 s
+   *  to map-side noise at sf10. `l2 = false` scores by plain dot (the kNN-graph /
    *  max-cosine-numerator cell rule) instead of 2·x·c − ‖c‖². */
   private[graft] def assignCellsMatrix(emb: DataFrame, centroids: Array[Array[Double]],
       l2: Boolean = true): DataFrame = {

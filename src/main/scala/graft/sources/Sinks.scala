@@ -15,54 +15,31 @@ import scala.util.control.NonFatal
  */
 object Sinks {
 
-  /** Paths already written by THIS process — the builder is invoked for
-   *  plan dumps too, which must not re-run the heavy write. */
-  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Catalog tables registered by THIS process (the bucketed-join pair) —
    *  tracked so [[cleanup]] can drop them with their backing files. */
   private val registeredTables = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def rmrf(path: String): Unit = ScratchFiles.deleteRecursively(java.nio.file.Paths.get(path))
-
-  /** First-writer-wins write memo that HEALS ON FAILURE: a write that
-   *  throws (ENOSPC mid-campaign is the measured case — sf100 attempt 12
-   *  lost three sink queries this way) removes its memo entry and its
-   *  partial output, so a retry in the same application re-runs the write
-   *  instead of reading a missing or truncated directory. */
-  private[sources] def writeOnce(out: String)(write: => Unit): Unit =
-    if (written.add(out)) {
-      try write
-      catch { case t: Throwable => written.remove(out); rmrf(out); throw t }
-    }
-
-  /** Delete every sink output THIS process has written and clear the write
-   *  memos — each sink query rebuilds its own scratch on next entry. A
-   *  capacity campaign calls this after each sink query: at sf100 the
-   *  family's round-trip outputs total ~16 GB, which accumulated until the
-   *  volume ran dry (attempt 12's ENOSPC); reaped per-query the transient
-   *  peak is the single largest output (~3 GB). */
+  /** Drop the bucketed tables and delete every scratch output
+   *  ([[ScratchFiles.release]]) — each sink query rebuilds its own scratch
+   *  on next entry. A capacity campaign calls this after each sink query:
+   *  at sf100 the family's round-trip outputs total ~16 GB, which
+   *  accumulated until the volume ran dry (attempt 12's ENOSPC); reaped
+   *  per-query the transient peak is the single largest output (~3 GB). */
   def cleanup(spark: SparkSession): Unit = {
     import scala.jdk.CollectionConverters._
     registeredTables.iterator().asScala.toVector.foreach { t =>
       try spark.sql(s"DROP TABLE IF EXISTS `$t`") catch { case NonFatal(_) => () }
     }
     registeredTables.clear()
-    written.iterator().asScala.toVector.foreach(rmrf)
-    written.clear()
+    ScratchFiles.release()
   }
 
   /** Write documents partitioned by `lang`, read back with a lang filter —
    *  the read plan prunes to one partition directory (PartitionFilters in
    *  `graft.Plans sink_partition_pruning`), so the count touches only the
-   *  matching files. Output oracled against the unpartitioned table.
-   *  The output path embeds the Spark application id: concurrent processes
-   *  (driver Verify + a developer Bench) must not race each other's
-   *  overwrite against a mid-flight read. */
+   *  matching files. Output oracled against the unpartitioned table. */
   def partitionPruning(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_sink_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(out) {
+    val out = ScratchFiles.output(spark, "sink_partition_pruning", dir) { out =>
       Tables.documents(spark, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(out)
     }
@@ -90,15 +67,6 @@ object Sinks {
   /** The bucket-join input (pre-agg) — separated so the spec can assert
    *  the join subplan is exchange- and sort-free. */
   private[graft] def joinSides(spark: SparkSession, dir: String): DataFrame = {
-    // the bucket count is part of the memo key: if the session's shuffle
-    // partitions change mid-application, a table written under the OLD
-    // count must not be silently reused (consumers and the plan spec's
-    // 'SelectedBucketsCount: n out of n' assertion assume the current conf)
-    val nBucketsForKey = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val key = s"${spark.sparkContext.applicationId}_${dir}_b$nBucketsForKey"
-      .replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_bucketed_$key"
-    val (tOrders, tLine) = (s"graft_bkt_orders_$key", s"graft_bkt_lineitem_$key")
     // bucket count sized like a shuffle, NOT a constant: a bucketed scan
     // reads ONE task per bucket, so a fixed count caps the join's
     // parallelism forever after (measured at sf100: 8 buckets = 75M-row
@@ -106,8 +74,15 @@ object Sinks {
     // shuffle-partition-sized buckets restore linear scaling). On a real
     // lake the same rule applies: pick buckets for the TABLE's size so
     // each bucket lands near the cluster's split target.
-    val nBuckets = nBucketsForKey
-    writeOnce(base) {
+    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val key = s"${spark.sparkContext.applicationId}_${dir}_b$nBuckets"
+      .replaceAll("[^a-zA-Z0-9]", "_")
+    val (tOrders, tLine) = (s"graft_bkt_orders_$key", s"graft_bkt_lineitem_$key")
+    // the bucket count is part of the output's name: if the session's
+    // shuffle partitions change mid-application, a table written under the
+    // OLD count must not be silently reused (consumers and the plan spec's
+    // 'SelectedBucketsCount: n out of n' assertion assume the current conf)
+    ScratchFiles.output(spark, s"sink_bucketed_join_b$nBuckets", dir) { base =>
       // a failed PREVIOUS attempt may have left one of the pair registered;
       // saveAsTable(overwrite) would survive that, but drop defensively so
       // the heal path always starts from a clean catalog
@@ -140,9 +115,7 @@ object Sinks {
    *  round-trip formatting on write, exact parse on read), and the
    *  aggregate matches the parquet-direct oracle bit-for-bit. */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_csv_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(out) {
+    val out = ScratchFiles.output(spark, "sink_csv_roundtrip", dir) { out =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").option("header", "true").csv(out)
@@ -165,15 +138,7 @@ object Sinks {
    *  proves string payload fidelity through the JSON escape/unescape
    *  round trip, not just numeric survival. */
   def ndjsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // "ndjsonsink", not "ndjson": graft.operators.SchemerQueries's
-    // schema-driven-read dump uses /tmp/graft_ndjson_<appId>_<dir> for its
-    // EVENTS projection — same key, different content. The two never
-    // collided only because the schema family always ran first and never
-    // re-read after the sink family's overwrite; distinct prefixes make
-    // the independence structural.
-    val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_ndjsonsink_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(out) {
+    val out = ScratchFiles.output(spark, "sink_ndjson_roundtrip", dir) { out =>
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("text"), col("n_chars"))
         .write.mode("overwrite").json(out)
@@ -195,9 +160,7 @@ object Sinks {
    *  and aggregated. Exercises that the engine's outputs are not
    *  parquet-bound: a warehouse standardized on ORC runs the same plans. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_orc_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(out) {
+    val out = ScratchFiles.output(spark, "sink_orc_roundtrip", dir) { out =>
       Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
@@ -245,23 +208,7 @@ object Sinks {
    *  The 4-value stats row collected up front is bookkeeping (min/max of
    *  two columns), never data. */
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).select(
-      col("event_id"), col("user_id"),
-      expr("ts div 3600000000000").as("hr"),
-      col("event_type"), col("value"))
-    val s = ev.agg(min("user_id"), max("user_id"), min("hr"), max("hr")).head()
-    val (mu, xu, mh, xh) = (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
-    val (ru, rh) = (math.max(xu - mu, 1L), math.max(xh - mh, 1L))
-    val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_zorder_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(out) {
-      val gx = expr(s"(user_id - $mu) * 255 div $ru") // integer div: 0..255 grid
-      val gy = expr(s"(hr - $mh) * 255 div $rh")
-      ev.withColumn("z", zKey(gx, gy))
-        .repartitionByRange(16, col("z"))
-        .sortWithinPartitions("z")
-        .write.mode("overwrite").parquet(out)
-    }
+    val (out, mu, xu, mh, xh) = zordered(spark, dir)
     // quartile box in RAW coordinates, floor-div exactly as the oracle's //
     val (uLo, uHi) = (mu + (xu - mu) / 4, mu + (xu - mu) / 2)
     val (hLo, hHi) = (mh + (xh - mh) / 4, mh + (xh - mh) / 2)
@@ -273,13 +220,31 @@ object Sinks {
       .orderBy("event_type")
   }
 
+  /** The z-ordered events on disk for `dir` (written on first use) with the
+   *  (min, max) of user_id and of the hour. */
+  private def zordered(spark: SparkSession, dir: String): (String, Long, Long, Long, Long) = {
+    val ev = Tables.events(spark, dir).select(
+      col("event_id"), col("user_id"),
+      expr("ts div 3600000000000").as("hr"),
+      col("event_type"), col("value"))
+    val s = ev.agg(min("user_id"), max("user_id"), min("hr"), max("hr")).head()
+    val (mu, xu, mh, xh) = (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
+    val (ru, rh) = (math.max(xu - mu, 1L), math.max(xh - mh, 1L))
+    val out = ScratchFiles.output(spark, "sink_zorder", dir) { out =>
+      val gx = expr(s"(user_id - $mu) * 255 div $ru") // integer div: 0..255 grid
+      val gy = expr(s"(hr - $mh) * 255 div $rh")
+      ev.withColumn("z", zKey(gx, gy))
+        .repartitionByRange(16, col("z"))
+        .sortWithinPartitions("z")
+        .write.mode("overwrite").parquet(out)
+    }
+    (out, mu, xu, mh, xh)
+  }
+
   /** The z-ordered files on disk for `dir` (written on first use) — lets
    *  SinkLayoutSpec measure per-file dimension spans. */
-  private[graft] def zorderPath(spark: SparkSession, dir: String): String = {
-    zorderLayout(spark, dir).collect() // ensure written
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_zorder_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-  }
+  private[graft] def zorderPath(spark: SparkSession, dir: String): String =
+    zordered(spark, dir)._1
 
   /** SMALL-FILE COMPACTION — the table-maintenance pass (OPTIMIZE /
    *  rewrite-data-files) every streaming-fed lake table needs: a 64-way
@@ -291,10 +256,20 @@ object Sinks {
    *  content preservation is the oracled contract here;
    *  [[graft.sources.SinkLayoutSpec]] pins the file-count geometry
    *  (64 → ≤ 4), which no SQL oracle can see. */
-  def compactSmallFiles(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_compact_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(root) {
+  def compactSmallFiles(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"${compactRoot(spark, dir)}/compacted")
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"),
+        countDistinct(col("user_id")).as("n_users"),
+        sum(col("event_id")).as("id_sum"))
+      .orderBy("event_type")
+
+  /** The root of [[compactSmallFiles]]' two layouts, `small` and
+   *  `compacted` (written on first use) — SinkLayoutSpec asserts their
+   *  file-count geometry. */
+  private[graft] def compactRoot(spark: SparkSession, dir: String): String =
+    ScratchFiles.output(spark, "sink_compact_small_files", dir) { root =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .repartition(64) // the fragmented state a micro-batch writer leaves
@@ -303,22 +278,6 @@ object Sinks {
         .coalesce(4)
         .write.mode("overwrite").parquet(s"$root/compacted")
     }
-    spark.read.parquet(s"$root/compacted")
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("event_id")).as("id_sum"))
-      .orderBy("event_type")
-  }
-
-  /** The compacted layout root for [[compactSmallFiles]] — consumed by
-   *  SinkLayoutSpec to assert the file-count geometry. */
-  private[graft] def compactRoot(spark: SparkSession, dir: String): String = {
-    compactSmallFiles(spark, dir).collect() // ensure both layouts exist
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_compact_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-  }
 
   /** SCHEMA EVOLUTION ON READ — the lake-table lifecycle a long-lived
    *  dataset goes through: an early batch written WITHOUT a column, a
@@ -330,9 +289,7 @@ object Sinks {
    *  complementary capability — evolving PHYSICAL schemas merged by
    *  footer metadata.) */
   def schemaMergeRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_evolve_" +
-      s"${spark.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    writeOnce(root) {
+    val root = ScratchFiles.output(spark, "sink_schema_merge", dir) { root =>
       val o = Tables.orders(spark, dir)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))

@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 /**
  * Structured Streaming over the events table: watermarked tumbling-window
@@ -152,13 +154,22 @@ object EventStreams {
 
   // ---- harness entries: replay parquet through the streaming plans --------
 
-  /** Replay scratch dir with a JVM-exit cleanup hook: replay sources and
-   *  file sinks write real parquet copies, and without the hook repeated
-   *  app runs would accumulate them in the system temp dir. */
-  private def tempDirWithCleanup(prefix: String): java.nio.file.Path = {
-    val p = Files.createTempDirectory(prefix)
-    graft.ScratchFiles.deleteOnExit(p)
-    p
+  /** Symlink `table`'s parquet data — a single file, or every `*.parquet`
+   *  file of a directory table — flat into `into` as `<prefix>.parquet` or
+   *  `<prefix>_<i>.parquet`, never copied: a replay dir must stay a flat
+   *  directory of leaf files for the `*.parquet` stream glob. Links point
+   *  at the ABSOLUTE path: a symlink target resolves against the LINK's
+   *  directory, so a relative sf dir (`data/sf10`) would produce dangling
+   *  links, and every stream consumer then fails with
+   *  UNABLE_TO_INFER_SCHEMA (14 queries at once in a bench). */
+  private[streaming] def linkFlat(table: Path, into: Path, prefix: String): Unit = {
+    val src = table.toAbsolutePath.normalize
+    if (Files.isDirectory(src)) {
+      val listing = Files.list(src)
+      try listing.filter(_.toString.endsWith(".parquet")).iterator().asScala.zipWithIndex
+        .foreach { case (f, i) => Files.createSymbolicLink(into.resolve(s"${prefix}_$i.parquet"), f) }
+      finally listing.close()
+    } else Files.createSymbolicLink(into.resolve(s"$prefix.parquet"), src)
   }
 
   private[streaming] def eventsStream(spark: SparkSession, dir: String, glob: String = "events.parquet",
@@ -196,25 +207,9 @@ object EventStreams {
     // session_window aggregation emit even the session holding the
     // global max event
     val sentinelTs = maxTs + 3 * SessionGapUs * 1000L // ts is nanos, gap micros
-    val tmp = tempDirWithCleanup("graft_sess_replay")
-    // single-file table → one symlink; multi-file directory table → one
-    // symlink per data file, flattened (the replay dir must stay a flat
-    // directory of leaf parquet files for the *.parquet stream glob).
-    // ABSOLUTE path: a symlink target resolves against the LINK's
-    // directory, so a relative sf dir (`data/sf10`) would produce links
-    // into /tmp/graft_sess_replay*/data/... — every stream consumer then
-    // fails with UNABLE_TO_INFER_SCHEMA (14 queries at once in a bench)
-    val srcTable = Paths.get(s"$dir/events.parquet").toAbsolutePath.normalize
-    if (Files.isDirectory(srcTable)) {
-      val listing = Files.list(srcTable)
-      var j = 0
-      try {
-        val it = listing.filter(_.toString.endsWith(".parquet")).iterator()
-        while (it.hasNext) {
-          Files.createSymbolicLink(tmp.resolve(s"events_$j.parquet"), it.next()); j += 1
-        }
-      } finally listing.close()
-    } else Files.createSymbolicLink(tmp.resolve("events.parquet"), srcTable)
+    val tmp = graft.ScratchFiles.dir("sess_replay")
+    val srcTable = Paths.get(s"$dir/events.parquet")
+    linkFlat(srcTable, tmp, "events")
     // leading underscore: Spark ignores the build dir when listing sources
     val build = tmp.resolve("_sentinel_build")
     // the sentinel file is globbed into the SAME stream source as the real
@@ -454,22 +449,9 @@ object EventStreams {
         // per-hour rollup of the SINGLE-copy table — 2× input, 1× output
         // is the whole point.
         val backfillDir = {
-          val tmp = tempDirWithCleanup("graft_backfill")
-          // absolute for the same reason as the session replay above:
-          // relative symlink targets break under a relative sf dir
-          val srcTable = Paths.get(s"$dir/events.parquet").toAbsolutePath.normalize
-          def linkAll(prefix: String): Unit =
-            if (Files.isDirectory(srcTable)) {
-              val listing = Files.list(srcTable)
-              var j = 0
-              try {
-                val it = listing.filter(_.toString.endsWith(".parquet")).iterator()
-                while (it.hasNext) {
-                  Files.createSymbolicLink(tmp.resolve(s"${prefix}_$j.parquet"), it.next()); j += 1
-                }
-              } finally listing.close()
-            } else Files.createSymbolicLink(tmp.resolve(s"$prefix.parquet"), srcTable)
-          linkAll("history"); linkAll("live")
+          val tmp = graft.ScratchFiles.dir("backfill")
+          val srcTable = Paths.get(s"$dir/events.parquet")
+          linkFlat(srcTable, tmp, "history"); linkFlat(srcTable, tmp, "live")
           tmp.toString
         }
         // PARQUET sink, not memory: the deduped stream is corpus-sized
@@ -477,7 +459,7 @@ object EventStreams {
         // the driver heap, which is exactly what OOMed the sf10 bench.
         // The file sink spills to disk like production and the rollup
         // reads it back through the commit log.
-        val backfillRoot = tempDirWithCleanup("graft_backfill_sink")
+        val backfillRoot = graft.ScratchFiles.dir("backfill_sink")
         // SINGLE-BATCH ASSUMPTION: exactly-once here relies on AvailableNow
         // reading ALL history+live symlinks in one micro-batch, so no copy
         // of an event ever arrives behind a watermark advanced by an
@@ -507,7 +489,7 @@ object EventStreams {
         // parquet with a checkpoint. The sink's _spark_metadata commit log
         // is what gives exactly-once across restarts; partitioning by
         // event_type matches how a downstream batch reader would prune.
-        val sinkRoot = tempDirWithCleanup("graft_stream_sink")
+        val sinkRoot = graft.ScratchFiles.dir("stream_sink")
         val qFile = withEventTime(eventsStream(spark, dir))
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
           .writeStream.format("parquet")
@@ -723,7 +705,7 @@ object EventStreams {
   def streamForeachUpsert(spark: SparkSession, dir: String,
                           filesPerTrigger: Option[Int] = None): DataFrame =
     upserts(spark, dir) {
-      val root = tempDirWithCleanup("graft_foreach_upsert")
+      val root = graft.ScratchFiles.dir("foreach_upsert")
       upsertRoots((spark.sparkContext.applicationId, dir)) = root
       val q = startUpsertQuery(spark, dir, root, filesPerTrigger)
       q.awaitTermination()

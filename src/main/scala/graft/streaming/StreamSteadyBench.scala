@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /**
  * STEADY-STATE streaming micro-batch latency bench (dev tool, the
@@ -33,12 +33,7 @@ object StreamSteadyBench {
     import spark.implicits._
 
     // ---- time-split source: history (95%) + increment (5%) ------------
-    val root = Files.createTempDirectory("graft_steady")
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator().asScala.toSeq.reverse.foreach(p =>
-        try Files.deleteIfExists(p) catch { case _: Exception => () })
-    }
+    val root = graft.ScratchFiles.dir("steady")
     val ev = Tables.events(spark, sfDir)
     val t95 = ev.stat.approxQuantile("ts", Array(0.95), 0.001).head.toLong
     val hist = root.resolve("hist"); val inc = root.resolve("inc")
@@ -48,24 +43,13 @@ object StreamSteadyBench {
       .write.parquet(inc.toString)
     println(s"""[steady] split done: t95=$t95""")
 
-    def linkParts(from: java.nio.file.Path, into: java.nio.file.Path, prefix: String): Unit = {
-      val listing = Files.list(from)
-      var i = 0
-      try {
-        val it = listing.filter(_.toString.endsWith(".parquet")).iterator()
-        while (it.hasNext) {
-          Files.createSymbolicLink(into.resolve(s"${prefix}_$i.parquet"), it.next()); i += 1
-        }
-      } finally listing.close()
-    }
-
     // each shape gets its own source dir (so file-source offsets are per-shape)
     def measure(name: String, mode: OutputMode)(build: DataFrame => DataFrame): Unit = {
       try {
         val srcRoot = root.resolve(s"src_$name")
         val srcTable = srcRoot.resolve("events.parquet")
         Files.createDirectories(srcTable)
-        linkParts(hist, srcTable, "hist")
+        EventStreams.linkFlat(hist, srcTable, "hist")
         val ckpt = root.resolve(s"ckpt_$name").toString
         def runOnce(): Double = {
           val q = build(EventStreams.eventsStream(spark, srcRoot.toString))
@@ -77,7 +61,7 @@ object StreamSteadyBench {
           (System.nanoTime() - t0) / 1e9
         }
         val replayS = runOnce()
-        linkParts(inc, srcTable, "inc")
+        EventStreams.linkFlat(inc, srcTable, "inc")
         val steadyS = runOnce()
         println(f"""{"name":"$name","replay_s":$replayS%.2f,"steady_s":$steadyS%.2f}""")
       } catch {

@@ -11,8 +11,7 @@ class ScaleGenSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val src = "/root/testdata/sf0.001"
   private lazy val out: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scalegen_spec")
-    dir.toFile.deleteOnExit()
+    val dir = graft.ScratchFiles.dir("graft_scalegen_spec")
     ScaleGen.generate(spark, src, dir.toString, copies = 3)
     dir.toString
   }

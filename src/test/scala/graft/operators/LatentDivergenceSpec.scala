@@ -20,8 +20,7 @@ class LatentDivergenceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_divergence")
-    dir.toFile.deleteOnExit()
+    val dir = graft.ScratchFiles.dir("graft_divergence")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = false),

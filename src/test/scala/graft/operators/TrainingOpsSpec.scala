@@ -123,8 +123,7 @@ class TrainingOpsSpec extends AnyFunSuite {
     // holds at max(len) >= 5, so these must come from the exhaustive pass
     val names = Seq("ab", "ba", "cat", "cart", "plum", "corn flower blue",
       "corn flower bleu", "navy linen", "wavy linen")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fuzzy_short")
-    tmp.toFile.deleteOnExit()
+    val tmp = graft.ScratchFiles.dir("graft_fuzzy_short")
     names.toDF("p_name").write.parquet(tmp.resolve("part.parquet").toString)
     val got = TextQueries.fuzzyJoin(spark, tmp.toString)
       .select("name_a", "name_b").as[(String, String)].collect().toSet

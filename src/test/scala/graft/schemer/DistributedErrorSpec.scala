@@ -29,7 +29,7 @@ class DistributedErrorSpec extends AnyFunSuite {
     Files.write(dir.resolve(name), String.join("\n", lines: _*).getBytes("UTF-8"))
 
   test("within-partition conflict names the partition and record") {
-    val dir = Files.createTempDirectory("graft_dist_err")
+    val dir = graft.ScratchFiles.dir("graft_dist_err")
     // records 1-2 agree; record 3 flips names from array to object
     writeFile(dir, "part-0.json", Seq(
       """{"names": ["Rok", "Manca"]}""",
@@ -47,7 +47,7 @@ class DistributedErrorSpec extends AnyFunSuite {
   }
 
   test("row-level conflict prints the offending document, like the reference") {
-    val dir = Files.createTempDirectory("graft_dist_err_row")
+    val dir = graft.ScratchFiles.dir("graft_dist_err_row")
     writeFile(dir, "part-0.json", Seq(
       """{"names": ["Rok", "Manca"]}""",
       """{"names": {"first": "Zala"}}"""))
@@ -63,7 +63,7 @@ class DistributedErrorSpec extends AnyFunSuite {
   }
 
   test("cross-partition conflict (each partition valid alone) surfaces at the reduce") {
-    val dir = Files.createTempDirectory("graft_dist_err2")
+    val dir = graft.ScratchFiles.dir("graft_dist_err2")
     // two files => two partitions; each is self-consistent, the CONFLICT
     // only exists across them, so only the witness reduce can see it
     writeFile(dir, "a.json", Seq("""{"x": [1, 2]}""", """{"x": [3]}"""))
@@ -77,7 +77,7 @@ class DistributedErrorSpec extends AnyFunSuite {
   }
 
   test("a clean multi-partition file infers the same witness as a single partition") {
-    val dir = Files.createTempDirectory("graft_dist_ok")
+    val dir = graft.ScratchFiles.dir("graft_dist_ok")
     writeFile(dir, "a.json", Seq("""{"id": 1, "name": "Rok"}""", """{"id": 1200, "city": {"name": "Lj"}}"""))
     writeFile(dir, "b.json", Seq("""{"id": -5, "name": "Manca-Lina"}""", """{"flag": true}"""))
     val multi = InferSchema.inferPath(spark, dir.toString)

@@ -120,7 +120,7 @@ class PathReaderSpec extends AnyFunSuite {
   /** Files of different sizes, line ends and codecs, and files the scan
    *  must skip (they would fail the fold if read). */
   private def mixedDir(): Path = {
-    val dir = Files.createTempDirectory("graft_path_reader")
+    val dir = graft.ScratchFiles.dir("graft_path_reader")
     write(dir, "part-000.json", ndjson("a", 30, "\n", blankEvery = 4))
     write(dir, "part-001.json", ndjson("b", 12, "\r\n"))
     write(dir, "part-002.json", ndjson("c", 20, "\r"))
@@ -154,7 +154,7 @@ class PathReaderSpec extends AnyFunSuite {
   }
 
   test("k=v subdirectories") {
-    val dir = Files.createTempDirectory("graft_path_reader_kv")
+    val dir = graft.ScratchFiles.dir("graft_path_reader_kv")
     write(dir, "k=1/a.json", ndjson("a", 9, "\n"))
     write(dir, "k=2/b.json", ndjson("b", 14, "\n"))
     write(dir, "k=2/c.json", ndjson("c", 3, "\r\n"))
@@ -163,12 +163,12 @@ class PathReaderSpec extends AnyFunSuite {
   }
 
   test("an empty directory folds to the empty object") {
-    val dir = Files.createTempDirectory("graft_path_reader_empty")
+    val dir = graft.ScratchFiles.dir("graft_path_reader_empty")
     assert(check(dir.toString) == Right(WObj.empty))
   }
 
   test("a missing path raises the same exception") {
-    val missing = Files.createTempDirectory("graft_path_reader_missing").resolve("nope.json").toString
+    val missing = graft.ScratchFiles.dir("graft_path_reader_missing").resolve("nope.json").toString
     val outcome = check(missing)
     assert(outcome.isLeft && outcome.left.toOption.get._2.contains("nope.json"), outcome)
   }
@@ -176,7 +176,7 @@ class PathReaderSpec extends AnyFunSuite {
   test("a SQL conf set between calls reaches the line reader") {
     // the reader's Hadoop conf is broadcast once and reused while it is
     // unchanged; every SQL conf is part of it
-    val dir = Files.createTempDirectory("graft_path_reader_conf")
+    val dir = graft.ScratchFiles.dir("graft_path_reader_conf")
     val long = """{"a":1,"b":"""" + "x" * 66 + """"}"""
     assert(long.length == 80)
     write(dir, "a.json", s"{\"a\":1}\n$long\n".getBytes(UTF_8))
@@ -199,7 +199,7 @@ class PathReaderSpec extends AnyFunSuite {
 
   test("after the context stops, a new session's inferPath works and the old context is released") {
     // in a JVM of its own: a test JVM's other suites keep their session
-    val dir = Files.createTempDirectory("graft_path_reader_restart")
+    val dir = graft.ScratchFiles.dir("graft_path_reader_restart")
     write(dir, "a.json", ndjson("a", 20, "\n"))
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.toArray
       .map(_.toString).filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
@@ -227,7 +227,7 @@ class PathReaderSpec extends AnyFunSuite {
       "no final line end" -> "ab\ncd",
       "only line ends" -> "\r\n\r\r\n\n\n\r",
       "empty" -> "")
-    val dir = Files.createTempDirectory("graft_path_reader_cuts")
+    val dir = graft.ScratchFiles.dir("graft_path_reader_cuts")
     for (((name, text), i) <- files.zipWithIndex) {
       val bytes = text.getBytes(ISO_8859_1)
       write(dir, s"$i.txt", bytes)
@@ -247,7 +247,7 @@ class PathReaderSpec extends AnyFunSuite {
   }
 
   test("input metrics: the records and bytes spark.read.textFile reports") {
-    val dir = Files.createTempDirectory("graft_path_reader_metrics")
+    val dir = graft.ScratchFiles.dir("graft_path_reader_metrics")
     val bytes = ndjson("a", 30, "\n", blankEvery = 4) ++ ndjson("b", 12, "\r\n")
     write(dir, "a.json", bytes)
     val path = dir.resolve("a.json").toString

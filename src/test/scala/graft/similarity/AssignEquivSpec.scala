@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The two nearest-centroid assignment implementations — the fused
  *  literal-array expression ([[Ann.assignCells]], small k) and the
- *  broadcast-join argmax ([[Ann.assignCellsJoin]], the √n-cell path) —
+ *  matrix expression ([[Ann.assignCellsMatrix]], the √n-cell path) —
  *  must agree cell-for-cell: same 2·x·c − ‖c‖² doubles, same
  *  lowest-cell tiebreak. Pinned at a k above the switch threshold so
  *  dedup_semantic's scaled path is what's actually compared. */
@@ -13,17 +13,13 @@ class AssignEquivSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  test("join-based and matrix assignments equal the literal-array argmax") {
+  test("matrix assignment equals the literal-array argmax") {
     val emb = Tables.embeddings(spark, dir)
     for (k <- Seq(8, 23, 40)) {
       val centroids = Ann.kmeansCentroids(emb, k, 2)
       val lit = Ann.assignCells(emb, centroids)
         .select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val joined = Ann.assignCellsJoin(emb, centroids)
-        .select("vec_id", "cell").collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(joined == lit, s"assignment mismatch at k=$k")
       val matrix = Ann.assignCellsMatrix(emb, centroids)
         .select("vec_id", "cell").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap

@@ -41,7 +41,7 @@ class KnnSplitSpec extends AnyFunSuite {
       (i, v, 0)
     }
     import spark.implicits._
-    val dirTmp = java.nio.file.Files.createTempDirectory("knnsplit").toString
+    val dirTmp = graft.ScratchFiles.dir("knnsplit").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dirTmp/embeddings.parquet")
 

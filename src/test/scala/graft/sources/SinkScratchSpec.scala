@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkTestSession
+import graft.{ScratchFiles, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
@@ -16,23 +16,23 @@ class SinkScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(name: String): String =
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_spec_$name"
+  /** The memoized output of `name`; fails the test if it was never written. */
+  private def written(name: String): String =
+    ScratchFiles.output(spark, name, dir)(_ => fail(s"$name has no output"))
 
-  test("writeOnce runs a write exactly once while it keeps succeeding") {
-    val out = tmp("once_ok")
+  test("output runs a write exactly once while it keeps succeeding") {
     var runs = 0
-    Sinks.writeOnce(out) { runs += 1 }
-    Sinks.writeOnce(out) { runs += 1 }
-    assert(runs == 1)
+    val first = ScratchFiles.output(spark, "spec_once_ok", dir) { _ => runs += 1 }
+    val second = ScratchFiles.output(spark, "spec_once_ok", dir) { _ => runs += 1 }
+    assert(runs == 1 && first == second)
   }
 
   test("a failed write heals: memo cleared, partial output removed, retry re-writes") {
-    val out = tmp("once_heal")
+    var partial = ""
     val boom = intercept[RuntimeException] {
-      Sinks.writeOnce(out) {
+      ScratchFiles.output(spark, "spec_once_heal", dir) { out =>
         // simulate ENOSPC mid-write: partial output lands, then the throw
-        Files.createDirectories(Paths.get(out))
+        partial = out
         Files.write(Paths.get(out, "part-00000"), Array[Byte](1, 2, 3))
         throw new RuntimeException("disk full")
       }
@@ -40,25 +40,22 @@ class SinkScratchSpec extends AnyFunSuite {
     assert(boom.getMessage == "disk full")
     // the partial directory must be gone — a retry that finds it would
     // read truncated data (attempt 12's UNABLE_TO_INFER_SCHEMA failure)
-    assert(!Files.exists(Paths.get(out)))
+    assert(partial.nonEmpty && !Files.exists(Paths.get(partial)))
     var retried = false
-    Sinks.writeOnce(out) { retried = true }
+    ScratchFiles.output(spark, "spec_once_heal", dir) { _ => retried = true }
     assert(retried, "the memo stayed poisoned after a failed write")
   }
 
   test("cleanup reaps the sink output and the next entry rebuilds it") {
-    import org.apache.spark.sql.functions.col
-    val appId = spark.sparkContext.applicationId
-    val out = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_sink_" +
-      s"${appId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     val n1 = Sinks.partitionPruning(spark, dir).count()
+    val out = written("sink_partition_pruning")
     assert(n1 > 0 && Files.exists(Paths.get(out)))
     Sinks.cleanup(spark)
     assert(!Files.exists(Paths.get(out)), "cleanup left the sink output behind")
     // the memo must be cleared with the files: next entry re-writes and
     // the read-back still answers
     val n2 = Sinks.partitionPruning(spark, dir).count()
-    assert(n2 == n1 && Files.exists(Paths.get(out)))
+    assert(n2 == n1 && Files.exists(Paths.get(written("sink_partition_pruning"))))
   }
 
   test("cleanup drops the bucketed tables so the next entry re-registers them") {

@@ -25,8 +25,7 @@ class StreamRecoverySpec extends AnyFunSuite {
 
   test("foreachBatch upsert recovers exactly-once from a crash between write and commit") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_recovery_upsert")
-    tmp.toFile.deleteOnExit()
+    val tmp = graft.ScratchFiles.dir("graft_recovery_upsert")
     val out = tmp.resolve("events.parquet").toString
     (0L until 4L).foreach { u =>
       (1L to 6L).map { i =>
@@ -34,8 +33,7 @@ class StreamRecoverySpec extends AnyFunSuite {
       }.toDF("event_id", "ts", "user_id", "event_type", "value")
         .coalesce(1).write.mode("append").parquet(out)
     }
-    val root = Files.createTempDirectory("graft_recovery_root")
-    root.toFile.deleteOnExit()
+    val root = graft.ScratchFiles.dir("graft_recovery_root")
     // run 1: crash AFTER batch 1's version dir is durable, BEFORE its commit
     val q1 = EventStreams.startUpsertQuery(spark, tmp.toString, root,
       filesPerTrigger = Some(1),
@@ -68,8 +66,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     // name order (f0i_a, f0i_b) — the shape a real backfill cutover has,
     // and the one where per-file triggers never advance the watermark
     // past an unseen FIRST copy
-    val tmp = Files.createTempDirectory("graft_recovery_backfill")
-    tmp.toFile.deleteOnExit()
+    val tmp = graft.ScratchFiles.dir("graft_recovery_backfill")
     val nFiles = 4
     (0 until nFiles).foreach { i =>
       val rows = (1L to 50L).map { j =>
@@ -79,15 +76,13 @@ class StreamRecoverySpec extends AnyFunSuite {
       val df = rows.toDF("event_id", "ts", "user_id", "event_type", "value").coalesce(1)
       // the file stream source lists LEAF files and skips non-partition
       // subdirectories, so each copy must be a single flat parquet file
-      val staging = Files.createTempDirectory(s"graft_recovery_stage_$i")
-      staging.toFile.deleteOnExit()
+      val staging = graft.ScratchFiles.dir(s"graft_recovery_stage_$i")
       df.write.mode("overwrite").parquet(staging.toString)
       val part = Files.list(staging).filter(_.toString.endsWith(".parquet")).findFirst().get()
       Files.copy(part, tmp.resolve(s"f0${i}_a.parquet"))
       Files.copy(part, tmp.resolve(s"f0${i}_b.parquet"))
     }
-    val sinkRoot = Files.createTempDirectory("graft_recovery_sink")
-    sinkRoot.toFile.deleteOnExit()
+    val sinkRoot = graft.ScratchFiles.dir("graft_recovery_sink")
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,

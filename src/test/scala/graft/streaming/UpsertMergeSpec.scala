@@ -19,8 +19,7 @@ class UpsertMergeSpec extends AnyFunSuite {
   // at most 2 of the 8 key-hash buckets — the carry-over path must engage
   private lazy val replayDir: String = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_upsert_spec")
-    tmp.toFile.deleteOnExit()
+    val tmp = graft.ScratchFiles.dir("graft_upsert_spec")
     val out = tmp.resolve("events.parquet").toString
     (0L until 4L).foreach { u =>
       (1L to 6L).map { i =>

@@ -39,7 +39,7 @@ class SplitLinesSpec extends AnyFunSuite {
   private val Capacities = Seq(1, 2, 3, 5, 8, 9, 16, 1 << 16)
 
   private def write(bytes: Array[Byte]): JPath = {
-    val f = Files.createTempDirectory("graft_split_lines").resolve("f.txt")
+    val f = _root_.graft.ScratchFiles.dir("graft_split_lines").resolve("f.txt")
     Files.write(f, bytes)
     f
   }

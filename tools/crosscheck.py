@@ -33,6 +33,15 @@ import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
+# DuckDB's defaults (80% of RAM, one thread per core) let the per-pixel
+# self-join of media_edge_density reach 15.6 GB RSS at sf0.1 on a 16 GB
+# host; with two threads it peaks at ~12.4 GiB. The limit is the smallest
+# whole-GB value at which ann_knn_graph still completes at sf0.1: DuckDB
+# does not spill enough of it, and it runs out of memory at 5, 8, 10 and
+# 11GB.
+MEMORY_LIMIT = "12GB"
+THREADS = 2
+
 
 # ---- mode 1: driver emulation ---------------------------------------------
 
@@ -72,6 +81,8 @@ def strict_canon(cols, rows):
 
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
+    con.execute(f"SET threads = {THREADS}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracles = json.loads(Path(out_dir, "oracle_sql.json").read_text())
