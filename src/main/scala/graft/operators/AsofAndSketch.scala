@@ -101,8 +101,8 @@ object AsofAndSketch {
    *  orders of magnitude inside the window). The DuckDB twin recomputes
    *  every exact figure and asserts the verdicts as literal 1s — a
    *  sketch that ever breaks its bound flips a flag and fails the hash
-   *  compare. Rank values come from the one-scan
-   *  [[ScalableRank.valuesAtGlobalRanks]] value-count locator (integer
+   *  compare. Rank values come from the
+   *  [[ScalableRank.valuesAtRanksFromCounts]] value-count locator (integer
    *  rank arithmetic ⌈q·n⌉ = (q·n+99) div 100 on both engines); only
    *  exact values and verdicts cross the compare boundary, so the output
    *  is stable under any partitioning. */

@@ -207,21 +207,20 @@ object RelationalQueries2 {
   }
 
   def q52Percentiles(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_extendedprice").cast("decimal(12,2)").as("price"),
-        col("l_orderkey"), col("l_linenumber"))
     // ceil in DOUBLE on both sides: identical IEEE math ⇒ identical target.
-    // rowsAtGlobalRanks sorts ONLY the range slices holding the 3 targets
-    // (3 of #partitions), not the whole table — the exact-percentile scale
-    // shape; the r6 form ranked every slice to read 3 rows.
+    // Only the VALUE at each rank is emitted, and under a price-led total
+    // order it does not depend on the tie-break, so the ranks are located
+    // in the shared lineitem price histogram — O(price domain), no scan.
     val qs = Seq(0.50, 0.90, 0.99)
-    val (hit, total) = ScalableRank.rowsAtGlobalRanks(
-      li, Seq(col("price"), col("l_orderkey"), col("l_linenumber")),
+    val (hit, total) = ScalableRank.valuesAtRanksFromCounts(
+      SharedHistograms.lineitemPriceCounts(spark, dir), "cents", "__c",
       n => qs.map(q => math.ceil(q * n).toLong), "rn")
     import spark.implicits._
     val tDf = broadcast(qs.map(q => (q, math.ceil(q * total).toLong)).toDF("q", "target_rn"))
+    // cents and 100 are exact doubles, so one division is the correctly
+    // rounded price — the same double as casting the decimal(12,2)
     hit.join(tDf, col("rn") === col("target_rn"))
-      .select(col("q"), col("price").cast("double").as("price"))
+      .select(col("q"), (col("cents").cast("double") / 100).as("price"))
       .orderBy("q")
   }
 

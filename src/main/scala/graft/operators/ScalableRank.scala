@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Tuning
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Scale-safe global ranking — the distributed form of
@@ -23,15 +24,27 @@ import org.apache.spark.sql.functions._
  */
 object ScalableRank {
 
+  /** The range slices every pass here starts from: `df` range-partitioned
+   *  by `sortCols` into one slice per shuffle partition (32 when unset),
+   *  each row tagged with its slice id `__pid`, persisted. Every caller
+   *  scans the slices twice (per-slice stats, then the local windows), and
+   *  the persist pins ONE partitioning across both: the range sampler
+   *  seeds from the RDD id, so re-planning it draws DIFFERENT boundaries
+   *  and the two scans would disagree on what `__pid` means (observed as
+   *  wrong percentiles on real data). */
+  private def rangeSlices(df: DataFrame, sortCols: Seq[Column]): DataFrame = {
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    df.repartitionByRange(parts, sortCols: _*)
+      .withColumn("__pid", spark_partition_id())
+      .persist(Tuning.persistLevel)
+  }
+
   /** Adds `outCol` = exact global 1-based row number under `sortCols`
    *  (which must form a total order). Returns (df, totalRows) — the total
    *  comes free from the offset pass and callers (ntile) need it. */
   def withGlobalRowNumber(df: DataFrame, sortCols: Seq[Column], outCol: String): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(Tuning.persistLevel) // scanned twice: once for counts, once for the local rank
+    val ranged = rangeSlices(df, sortCols)
     val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
@@ -63,10 +76,7 @@ object ScalableRank {
   def withRowNumberAndPrefixSum(df: DataFrame, sortCols: Seq[Column], valueCol: String,
                                 rnCol: String, sumCol: String): (DataFrame, Long, Long, () => Unit) = {
     val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(Tuning.persistLevel) // scanned twice: slice stats, then the local windows
+    val ranged = rangeSlices(df, sortCols)
     val stats = ranged.groupBy("__pid")
       // coalesce: a non-empty slice whose values are ALL NULL sums to NULL
       // (none of the current callers feed nullable values, but getLong on
@@ -94,33 +104,6 @@ object ScalableRank {
     (out, total, totalSum, () => { ranged.unpersist(blocking = false); () })
   }
 
-  /** VALUES at specific global ranks in ONE scan — the pure-percentile
-   *  shape, for callers that only need the value at a rank (not the full
-   *  row): the value at global rank r under ANY tie-broken total order
-   *  led by `valueCol` is determined solely by the value distribution, so
-   *  a value-count table replaces the sort entirely. One map-side-combined
-   *  groupBy over the input (the only full scan), a shuffle bounded by the
-   *  VALUE DOMAIN (a price domain stays ~600k distinct cents whether the
-   *  table is 6M or 60B rows — the right 100 TB shape), a P-row
-   *  per-partition weight collect, then a window cumsum over only the hit
-   *  range slices of the small table. Versus [[rowsAtGlobalRanks]]'s three
-   *  full scans (stats, bucket counts, hit scan) this is strictly less
-   *  work whenever the caller discards everything but the value.
-   *
-   *  Precondition: `valueCol` must be non-null (enforced — Spark sorts
-   *  nulls first, DuckDB last, so a null-bearing rank would diverge
-   *  between engines; count the nulls out before calling).
-   *  Returns (rows of (`outCol` = global rank, `valueCol`), total). */
-  def valuesAtGlobalRanks(df: DataFrame, valueCol: String,
-                          ranksOf: Long => Seq[Long], outCol: String): (DataFrame, Long) = {
-    // persist BEFORE repartitionByRange: its sampler replays the input
-    // subplan as a separate job, which would re-run the full groupBy scan
-    // (the round-8 range-sampler lesson); the cached frame is domain-sized
-    val vc = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
-      .persist(Tuning.persistLevel)
-    valuesAtRanksFromCounts(vc, valueCol, "__c", ranksOf, outCol)
-  }
-
   /** Per-corpus shared value-count snapshot — the engine's exact-histogram
    *  STATISTICS ARTIFACT: `(value, count)` for every distinct value of one
    *  expression over one table, built once per (application, corpus) and
@@ -137,24 +120,25 @@ object ScalableRank {
                        (build: => DataFrame): DataFrame =
     vcCache(spark, (dir, key))(build.groupBy(col(valueCol)).agg(count(lit(1)).as("__c")))
 
-  /** The locate half of [[valuesAtGlobalRanks]], over an EXISTING
-   *  `(valueCol, countCol)` table (a [[sharedValueCounts]] snapshot or any
-   *  derived count table, e.g. |v − median| for MAD): range-partition the
-   *  small table, collect per-slice weights (O(#partitions) driver rows),
-   *  map each target rank to its slice, window-cumsum ONLY the hit slices.
+  /** VALUES at specific global ranks, located in a `(valueCol, countCol)`
+   *  table (a [[sharedValueCounts]] snapshot or any derived count table,
+   *  e.g. |v − median| for MAD) — the pure-percentile shape: the value at
+   *  global rank r under ANY tie-broken total order led by `valueCol` is
+   *  determined solely by the value distribution, so the count table
+   *  replaces the sort entirely. Range-partition the small table, collect
+   *  per-slice weights (O(#partitions) driver rows), map each target rank
+   *  to its slice, window-cumsum ONLY the hit slices. `ranksOf` receives
+   *  the total and returns the 1-based ranks wanted; ranks outside
+   *  [1, total] are dropped.
+   *
+   *  Precondition: `valueCol` must be non-null (enforced — Spark sorts
+   *  nulls first, DuckDB last, so a null-bearing rank would diverge
+   *  between engines; count the nulls out before calling).
    *  Returns (rows of (`outCol` = rank, `valueCol`), total = Σ count). */
   def valuesAtRanksFromCounts(vcIn: DataFrame, valueCol: String, countCol: String,
                               ranksOf: Long => Seq[Long], outCol: String): (DataFrame, Long) = {
     val spark = vcIn.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // persist the RANGED frame: repartitionByRange seeds its sampler from
-    // the RDD id, so re-planning it in a second action draws DIFFERENT
-    // boundaries — the weight collect and the hit cumsum would disagree on
-    // what __pid means (observed as wrong percentiles on real data). The
-    // barrier pins one partitioning across both scans; it is domain-sized.
-    val vc = vcIn.repartitionByRange(parts, col(valueCol))
-      .withColumn("__pid", spark_partition_id())
-      .persist(Tuning.persistLevel)
+    val vc = rangeSlices(vcIn, Seq(col(valueCol))) // domain-sized
     val sums = vc.groupBy("__pid")
       .agg(sum(countCol).as("w"), count(when(col(valueCol).isNull, 1)).as("nulls"))
       .collect().map(r => (r.getInt(0), r.getAs[Long]("w"), r.getAs[Long]("nulls")))
@@ -182,127 +166,6 @@ object ScalableRank {
     (out, total)
   }
 
-  /** Rows at specific global ranks WITHOUT ranking the whole table — the
-   *  exact-percentile shape: range-partition by the sort key, count per
-   *  slice (tiny driver-side table, like the offset pass above), locate
-   *  each target rank's slice, then sort ONLY the hit slices and pick the
-   *  local rank. At 1000 slices and 3 percentile targets this sorts 3
-   *  slices instead of 1000 — the difference between an exact-percentile
-   *  query costing a full distributed sort and costing ~nothing beyond
-   *  the range exchange. `ranksOf` receives the total row count (free
-   *  from the count pass) and returns the 1-based global ranks wanted.
-   *  Returns (hit rows + `outCol` = global rank, total).
-   *
-   *  DETERMINISM REQUIREMENT: the histogram fast path scans `df` three
-   *  times (stats, bucket counts, hit scan) with no persist barrier, so
-   *  `df` must be deterministic — a non-deterministic frame (sample,
-   *  shuffle-order-dependent collect_set upstream, rand) could yield
-   *  bucket counts inconsistent with the hit scan and silently drop or
-   *  mislabel hit rows. Every current caller passes a pure projection of
-   *  a parquet table; a future caller with a non-deterministic input must
-   *  persist it first (the range fallback persists precisely for this). */
-  def rowsAtGlobalRanks(df: DataFrame, sortCols: Seq[Column],
-                        ranksOf: Long => Seq[Long], outCol: String): (DataFrame, Long) = {
-    // HISTOGRAM fast path when the LEADING sort key is numeric (every
-    // percentile caller leads with an exact cents/price column): instead
-    // of range-shuffling the whole table (a full exchange — 7.6 s of
-    // q87_tukey's cold cost at sf10), bucket the leading key through a
-    // MONOTONE double cast into 2¹⁶ equal-width bins, count bins with one
-    // map-side-combined aggregate (a 65k-row shuffle), locate each target
-    // rank's bin on the driver, and sort only the hit bins (~n/65536 rows
-    // each). Three narrow scans and no wide shuffle — on a cluster a scan
-    // is strictly cheaper than a full exchange (no write amplification).
-    // Monotonicity is all the map needs (equal doubles may merge adjacent
-    // values into one bin — still exact, ranks inside a bin come from the
-    // true sort). Falls back to the range-exchange path when the leading
-    // key is non-numeric, null-bearing, degenerate (one value), or a hit
-    // bin is pathologically populated (> 4M rows of one value — the
-    // single-task sort bound).
-    val spark = df.sparkSession
-    val lead = sortCols.head
-    // the ORIGINAL type must be numeric — a string column would survive a
-    // double cast but order differently ("10" < "9" lexically) — and the
-    // bin map assumes ASCENDING order on every sort column
-    val anyDesc = sortCols.exists(c =>
-      org.apache.spark.sql.graft.ColumnBridge.expression(c) match {
-        case so: org.apache.spark.sql.catalyst.expressions.SortOrder =>
-          so.direction != org.apache.spark.sql.catalyst.expressions.Ascending
-        case _ => false
-      })
-    val leadIsNumeric = try {
-      df.select(lead.as("__k")).schema.head.dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    } catch { case _: Exception => false }
-    if (!leadIsNumeric || anyDesc) return rowsAtGlobalRanksRange(df, sortCols, ranksOf, outCol)
-    val stats = df.agg(count(lit(1)).as("n"), count(when(lead.isNull, 1)).as("nulls"),
-      min(lead.cast("double")).as("mn"), max(lead.cast("double")).as("mx")).head()
-    val total = stats.getLong(0)
-    if (total == 0L) return rowsAtGlobalRanksRange(df, sortCols, ranksOf, outCol)
-    val nulls = stats.getLong(1)
-    val mn = stats.getDouble(2); val mx = stats.getDouble(3)
-    if (nulls > 0L || !(mx > mn) || mn.isInfinite || mx.isInfinite)
-      return rowsAtGlobalRanksRange(df, sortCols, ranksOf, outCol)
-    val nb = 65536
-    val w = (mx - mn) / nb
-    val bucketCol = least(lit(nb - 1), greatest(lit(0),
-      floor((lead.cast("double") - lit(mn)) / lit(w)).cast("int")))
-    val counts = df.groupBy(bucketCol.as("__b")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    // (bucket, rows-before-bucket) — O(bins), driver-side bookkeeping
-    val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (b, c)) => (b, acc + c) }
-    val before = counts.map(_._1).zip(offsets.init.map(_._2)).toMap
-    val hits = ranksOf(total).distinct.collect {
-      case r if r >= 1 && r <= total =>
-        val b = counts.find { case (p, c) => r > before(p) && r <= before(p) + c }.get._1
-        (b, r - before(b), r)
-    }
-    val countOf = counts.toMap
-    if (hits.exists { case (b, _, _) => countOf(b) > 4000000L })
-      return rowsAtGlobalRanksRange(df, sortCols, ranksOf, outCol)
-    import spark.implicits._
-    val hitDf = broadcast(hits.toDF("__b", "__lrn", outCol))
-    val local = Window.partitionBy("__b").orderBy(sortCols: _*)
-    val out = df.withColumn("__b", bucketCol)
-      .filter(col("__b").isin(hits.map(_._1).distinct: _*))
-      .withColumn("__lrn", row_number().over(local).cast("bigint"))
-      .join(hitDf, Seq("__b", "__lrn"))
-      .drop("__b", "__lrn")
-    (out, total)
-  }
-
-  /** The range-exchange form of [[rowsAtGlobalRanks]] — the fallback when
-   *  the leading sort key can't drive the histogram (non-numeric, nulls,
-   *  single-valued, or a hit bin too hot to single-task-sort): range-
-   *  partition by the full sort key, count per slice, sort only the hit
-   *  slices. Correct for ANY total order; costs one full exchange. */
-  private def rowsAtGlobalRanksRange(df: DataFrame, sortCols: Seq[Column],
-                        ranksOf: Long => Seq[Long], outCol: String): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(Tuning.persistLevel) // scanned twice: once for counts, once for the hit-slice sort
-    val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    // (pid, rows-before-pid) — O(#partitions), driver-side bookkeeping
-    val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
-    val before = counts.map(_._1).zip(offsets.init.map(_._2)).toMap
-    val hits = ranksOf(total).distinct.collect {
-      case r if r >= 1 && r <= total =>
-        val pid = counts.find { case (p, c) => r > before(p) && r <= before(p) + c }.get._1
-        (pid, r - before(pid), r)
-    }
-    import spark.implicits._
-    val hitDf = broadcast(hits.toDF("__pid", "__lrn", outCol))
-    val local = Window.partitionBy("__pid").orderBy(sortCols: _*)
-    val out = ranged.filter(col("__pid").isin(hits.map(_._1).distinct: _*))
-      .withColumn("__lrn", row_number().over(local).cast("bigint"))
-      .join(hitDf, Seq("__pid", "__lrn"))
-      .drop("__pid", "__lrn")
-    (out, total)
-  }
-
   /** Adds `outCol` = exact EXCLUSIVE running sum of `valueCol` within each
    *  `groupCols` group ordered by `sortCols` (which must total-order rows
    *  within a group), without ever funneling one group through a single
@@ -312,47 +175,19 @@ object ScalableRank {
    *    1. range-partition by (group ++ sort) — each group becomes a run of
    *       contiguous range slices, each slice sized ~|data|/#partitions,
    *    2. window-sum locally inside each (slice, group) — parallel,
-   *    3. carry in per-slice offsets. Range partitioning keeps groups
-   *       contiguous, so at most #partitions−1 groups straddle a boundary
-   *       and the carry table has ≤ 2·#partitions rows — bookkeeping-sized,
-   *       like the offset pass in [[withGlobalRowNumber]] — broadcast back.
-   */
+   *    3. carry in per-slice offsets ([[carryIn]], bookkeeping-sized like
+   *       the offset pass in [[withGlobalRowNumber]]) — broadcast back. */
   def withGroupedPrefixSum(df: DataFrame, groupCols: Seq[String], sortCols: Seq[String],
                            valueCol: String, outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(parts, (groupCols ++ sortCols).map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(Tuning.persistLevel) // scanned twice: once for boundary totals, once for the local sums
-    val pidGroup = ("__pid" +: groupCols).map(col)
-    val totals = ranged.groupBy(pidGroup: _*).agg(sum(col(valueCol)).cast("long").as("__psum"))
-    // Only groups spanning >1 range slice need a carry-in; collect just those.
-    val spanning = totals.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).drop("__n")
-    // the using-column semi join moves the join columns to the FRONT of the
-    // row, so re-select the explicit (__pid, groups…, __psum) layout the
-    // index-based fold below depends on
-    val spanRows = totals.join(spanning, groupCols, "left_semi")
-      .select(("__pid" +: groupCols :+ "__psum").map(col): _*)
-      .collect() // ≤ 2·#partitions rows
-    val offRows = spanRows
-      .groupBy(r => groupCols.indices.map(i => r.get(1 + i))) // row layout: __pid, groups…, __psum
-      .valuesIterator.flatMap { rs =>
-        val sorted = rs.sortBy(_.getInt(0))
-        // emit every non-zero carry — NEGATIVE carries are real (e.g. a
-        // sweep-line boundary stream whose −1 lands in the slice before
-        // its +1); only the no-op zero carry may be left to the coalesce
-        sorted.zip(sorted.scanLeft(0L)((acc, r) => acc + r.getLong(r.length - 1)).init)
-          .collect { case (r, off) if off != 0 => Row.fromSeq(r.toSeq.init :+ off) }
-      }.toSeq
-    val offSchema = StructType(totals.schema.fields.init :+ StructField("__goff", LongType, nullable = false))
-    val offsetDf = broadcast(spark.createDataFrame(spark.sparkContext.parallelize(offRows, 1), offSchema))
-    val localW = Window.partitionBy(pidGroup: _*).orderBy(sortCols.map(col): _*)
+    val ranged = rangeSlices(df, (groupCols ++ sortCols).map(col))
+    // emit every non-zero carry — NEGATIVE carries are real (e.g. a
+    // sweep-line boundary stream whose −1 lands in the slice before its
+    // +1); only the no-op zero carry is left to the coalesce
+    val carry = carryIn(ranged, groupCols, sum(col(valueCol)), 0L, _ + _, "__goff")
+    val localW = Window.partitionBy(("__pid" +: groupCols).map(col): _*).orderBy(sortCols.map(col): _*)
     ranged
       .withColumn("__lsum", sum(col(valueCol)).over(localW).cast("long") - col(valueCol))
-      .join(offsetDf, "__pid" +: groupCols, "left")
+      .join(carry, "__pid" +: groupCols, "left")
       .withColumn(outCol, (col("__lsum") + coalesce(col("__goff"), lit(0L))).cast("long"))
       .drop("__pid", "__lsum", "__goff")
   }
@@ -369,40 +204,50 @@ object ScalableRank {
    *  whole candidate set through one task. */
   def withGroupedPrefixMax(df: DataFrame, groupCols: Seq[String], sortCols: Seq[String],
                            valueCol: String, outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(parts, (groupCols ++ sortCols).map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(Tuning.persistLevel) // scanned twice: once for slice maxima, once for the local windows
-    val pidGroup = ("__pid" +: groupCols).map(col)
-    val totals = ranged.groupBy(pidGroup: _*).agg(max(col(valueCol)).cast("long").as("__pmax"))
-    val spanning = totals.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).drop("__n")
-    // re-select the explicit layout — the using-column semi join fronts the
-    // join columns (the withGroupedPrefixSum lesson, kept here on purpose)
-    val spanRows = totals.join(spanning, groupCols, "left_semi")
-      .select(("__pid" +: groupCols :+ "__pmax").map(col): _*)
-      .collect() // ≤ 2·#partitions rows
-    val offRows = spanRows
-      .groupBy(r => groupCols.indices.map(i => r.get(1 + i)))
-      .valuesIterator.flatMap { rs =>
-        val sorted = rs.sortBy(_.getInt(0))
-        sorted.zip(sorted.scanLeft(Long.MinValue)((acc, r) => math.max(acc, r.getLong(r.length - 1))).init)
-          .collect { case (r, m) if m != Long.MinValue => Row.fromSeq(r.toSeq.init :+ m) }
-      }.toSeq
-    val offSchema = StructType(totals.schema.fields.init :+ StructField("__gmax", LongType, nullable = false))
-    val offsetDf = broadcast(spark.createDataFrame(spark.sparkContext.parallelize(offRows, 1), offSchema))
+    val ranged = rangeSlices(df, (groupCols ++ sortCols).map(col))
+    val carry = carryIn(ranged, groupCols, max(col(valueCol)), Long.MinValue, math.max, "__gmax")
     // exclusive frame: the row's own value must NOT see itself
-    val localW = Window.partitionBy(pidGroup: _*).orderBy(sortCols.map(col): _*)
+    val localW = Window.partitionBy(("__pid" +: groupCols).map(col): _*).orderBy(sortCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     ranged
       .withColumn("__lmax", max(col(valueCol)).over(localW).cast("long"))
-      .join(offsetDf, "__pid" +: groupCols, "left")
+      .join(carry, "__pid" +: groupCols, "left")
       // greatest() skips NULLs: local-only, carry-only, both, or neither
       .withColumn(outCol, greatest(col("__lmax"), col("__gmax")))
       .drop("__pid", "__lmax", "__gmax")
+  }
+
+  /** The carry-in table of a grouped prefix pass over `ranged` (the
+   *  [[rangeSlices]] of group ++ sort): `sliceAgg` (long-castable) per
+   *  (slice, group), then for every group that spans more than one slice
+   *  the fold of its EARLIER slices' aggregates into `carryCol`, broadcast.
+   *  Range partitioning keeps groups contiguous, so at most #partitions−1
+   *  groups straddle a boundary and the table has ≤ 2·#partitions rows.
+   *  Carries equal to `zero` (the fold's identity) are left out; the
+   *  caller's left join reads them as NULL. */
+  private def carryIn(ranged: DataFrame, groupCols: Seq[String], sliceAgg: Column,
+                      zero: Long, fold: (Long, Long) => Long, carryCol: String): DataFrame = {
+    val spark = ranged.sparkSession
+    val totals = ranged.groupBy(("__pid" +: groupCols).map(col): _*)
+      .agg(sliceAgg.cast("long").as("__slice"))
+    // Only groups spanning >1 range slice need a carry-in; collect just those.
+    val spanning = totals.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).drop("__n")
+    // the using-column semi join moves the join columns to the FRONT of the
+    // row, so re-select the explicit (__pid, groups…, __slice) layout the
+    // index-based fold below depends on
+    val spanRows = totals.join(spanning, groupCols, "left_semi")
+      .select(("__pid" +: groupCols :+ "__slice").map(col): _*)
+      .collect() // ≤ 2·#partitions rows
+    val carryRows = spanRows
+      .groupBy(r => groupCols.indices.map(i => r.get(1 + i))) // row layout: __pid, groups…, __slice
+      .valuesIterator.flatMap { rs =>
+        val sorted = rs.sortBy(_.getInt(0))
+        sorted.zip(sorted.scanLeft(zero)((acc, r) => fold(acc, r.getLong(r.length - 1))).init)
+          .collect { case (r, c) if c != zero => Row.fromSeq(r.toSeq.init :+ c) }
+      }.toSeq
+    val schema = StructType(totals.schema.fields.init :+ StructField(carryCol, LongType, nullable = false))
+    broadcast(spark.createDataFrame(spark.sparkContext.parallelize(carryRows, 1), schema))
   }
 
   /** Adds `outCol` = exact `ntile(n)` bucket (1-based BIGINT) under

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** The per-corpus exact price histograms — the two value distributions the
- *  whole robust-stat family (sketch_stats, q69 equiheight, q87 Tukey on
- *  lineitem; q80 MAD, q86 Bowley, q88 winsorized on orders) is a pure
+ *  whole robust-stat family (sketch_stats, q52 percentiles, q69
+ *  equiheight, q87 Tukey on lineitem; q80 MAD, q86 Bowley, q88
+ *  winsorized on orders) is a pure
  *  functional of. Built once per (application, corpus) via
  *  [[ScalableRank.sharedValueCounts]]; each table is bounded by its VALUE
  *  DOMAIN (~600k distinct price cents regardless of row count), so after

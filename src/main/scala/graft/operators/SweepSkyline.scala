@@ -344,12 +344,11 @@ object SweepSkyline {
   /** MEDIAN + MAD (median absolute deviation) of order totals — the
    *  robust dispersion pair behind outlier fences that survive heavy
    *  tails (unlike mean/stddev, one whale order cannot move them). BOTH
-   *  medians are lower medians at explicit global rank ⌈n/2⌉ under a
-   *  total order (cents, orderkey), located by
-   *  [[ScalableRank.rowsAtGlobalRanks]] — count the range slices, sort
-   *  only the ONE slice holding the rank — twice: once on values, once
-   *  on |value − median| with the 1-row median broadcast. Never a global
-   *  sort; every output integer. */
+   *  medians are lower medians at explicit global rank ⌈n/2⌉, located by
+   *  [[ScalableRank.valuesAtRanksFromCounts]] in the shared orders price
+   *  histogram — twice: once on values, once on |value − median| with
+   *  the 1-row median broadcast. Never a global sort; every output
+   *  integer. */
   def q80Mad(spark: SparkSession, dir: String): DataFrame = {
     // BOTH rank passes are functionals of the shared orders price
     // histogram: the median from the value counts directly, and the MAD
@@ -372,10 +371,10 @@ object SweepSkyline {
 
   /** BOWLEY (quartile) SKEWNESS of order totals — the robust asymmetry
    *  statistic that pairs with [[q80Mad]]'s robust dispersion: all three
-   *  quartiles are ACTUAL data rows at explicit global ranks ⌈n/4⌉,
-   *  ⌈n/2⌉, ⌈3n/4⌉ under the (cents, orderkey) total order, located in
-   *  ONE [[ScalableRank.rowsAtGlobalRanks]] pass (3 target ranks → at
-   *  most 3 slices sorted). The coefficient (Q₃+Q₁−2Q₂)/(Q₃−Q₁) is
+   *  quartiles are ACTUAL data values at explicit global ranks ⌈n/4⌉,
+   *  ⌈n/2⌉, ⌈3n/4⌉, located in ONE
+   *  [[ScalableRank.valuesAtRanksFromCounts]] pass over the shared orders
+   *  price histogram. The coefficient (Q₃+Q₁−2Q₂)/(Q₃−Q₁) is
    *  signed, so it ships as one float division over the exact integer
    *  quartiles (the kappa/q73 convention — signed integer `div` vs `//`
    *  would diverge between engines). */
@@ -393,10 +392,10 @@ object SweepSkyline {
   }
 
   /** TUKEY FENCE OUTLIER CENSUS — the boxplot rule at scale: count rows
-   *  beyond Q₁−1.5·IQR / Q₃+1.5·IQR. Quartiles come from the same
-   *  hit-slice rank locator; the fence test is cross-multiplied by 2
+   *  beyond Q₁−1.5·IQR / Q₃+1.5·IQR. Quartiles come from the shared
+   *  lineitem price histogram; the fence test is cross-multiplied by 2
    *  (`2x < 5Q₁ − 3Q₃`) so the 1.5 factor never becomes a float; the
-   *  census is one filtered recount of the (pushed-down, 2-column) scan.
+   *  census is a count-weighted fold of the same histogram.
    *  Fences themselves are reported as EXACT half-cents (×2). */
   def q87Tukey(spark: SparkSession, dir: String): DataFrame = {
     // quartiles AND the fence census both read the shared lineitem price
@@ -424,9 +423,10 @@ object SweepSkyline {
    *  that completes the robust family (MAD dispersion, Bowley skew,
    *  Tukey fences): clamp every value to the P5/P95 data points, then
    *  the exact integer mean in half-up hundredths of a cent. Both
-   *  percentile rows come from ONE [[ScalableRank.rowsAtGlobalRanks]]
-   *  pass; the clamp+sum is one recount of the pushed-down scan against
-   *  the broadcast 1-row bounds. */
+   *  percentile values come from ONE
+   *  [[ScalableRank.valuesAtRanksFromCounts]] pass over the shared orders
+   *  price histogram; the clamp+sum is a count-weighted fold of the same
+   *  histogram against the broadcast 1-row bounds. */
   def q88Winsorized(spark: SparkSession, dir: String): DataFrame = {
     // percentile bounds and BOTH moment sums (clamped and raw) are
     // count-weighted folds of the shared orders price histogram —

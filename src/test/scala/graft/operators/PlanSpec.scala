@@ -90,13 +90,10 @@ class PlanSpec extends AnyFunSuite {
     for (q <- Seq("q80_mad", "q86_bowley", "q87_tukey", "q88_winsorized",
                   "q89_grouped_median", "q81_rfm", "q72_decile_mobility")) {
       val p = plan(q)
-      // two sanctioned distributed shapes: the range-partition + per-slice
-      // window path, or the histogram fast path (hash-partition by the
-      // integer value bucket __b, window per bucket) — both split the sort
-      // across tasks; what's banned is the partition-less global window
-      assert(p.toLowerCase.contains("rangepartitioning") ||
-        p.toLowerCase.contains("hashpartitioning(__b"),
-        s"$q must range-partition or histogram-bucket its rank pass")
+      // the range-partition + per-slice window path splits the sort across
+      // tasks; what's banned is the partition-less global window
+      assert(p.toLowerCase.contains("rangepartitioning"),
+        s"$q must range-partition its rank pass")
       assert(globalWindow.findFirstIn(p).isEmpty,
         s"$q has a no-partition (single-task) window")
     }
@@ -292,14 +289,14 @@ class PlanSpec extends AnyFunSuite {
     assert(windows.nonEmpty, "the local rank should still be windowed")
     windows.foreach { w =>
       val keys = w.partitionSpec.flatMap(_.references.toSeq.map(_.name))
-      assert(w.partitionSpec.nonEmpty &&
-        keys.exists(k => k.startsWith("__pid") || k.startsWith("__b")),
-        s"the rank window must partition by the range-slice id or the " +
-          s"histogram bucket (got $keys) — a global window would " +
-          "single-task-sort the table")
+      assert(w.partitionSpec.nonEmpty && keys.exists(_.startsWith("__pid")),
+        s"the rank window must partition by the range-slice id (got $keys) " +
+          "— a global window would single-task-sort the table")
     }
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), "the 3-row target-rank join must broadcast")
+    assert(!p.contains("FileScan parquet"),
+      "q52 must read the shared price histogram, not scan lineitem")
   }
 
   test("pipeline_dsir_weights: 64-row ratio table broadcasts; no window, no cartesian") {

@@ -30,9 +30,10 @@ class ScalableRankSpec extends AnyFunSuite {
 
   test("grouped prefix sum is exact when a group spans multiple range slices") {
     // r6 regression: the carry-in branch only executes when a group straddles
-    // ≥2 range partitions — 2 string-keyed groups × 2000 rows over 32 slices
-    // guarantees it (and the STRING key reproduces the using-join
-    // column-order ClassCastException the r6 driver bench hit at sf0.1)
+    // ≥2 range partitions — 2 string-keyed groups × 2000 rows over the
+    // test session's 4 slices guarantees it (and the STRING key reproduces
+    // the using-join column-order ClassCastException the r6 driver bench
+    // hit at sf0.1)
     val df = (1 to 4000).map { i =>
       (if (i % 2 == 0) "web" else "api", i.toLong, (i % 13).toLong)
     }.toDF("source", "seq", "amount").repartition(11)
@@ -51,7 +52,7 @@ class ScalableRankSpec extends AnyFunSuite {
     // r7 regression: the carry filter dropped carries ≤ 0, so a sweep-line
     // boundary stream (±1 deltas) whose running sum dips negative at a
     // slice boundary read a 0 carry-in. ±1 alternating with more −1s early
-    // keeps many prefixes negative across the 32 range slices.
+    // keeps many prefixes negative across the 4 range slices.
     val df = (1 to 4000).map { i =>
       ("sweep", i.toLong, if (i % 3 == 0) 1L else -1L)
     }.toDF("source", "seq", "delta").repartition(11)
@@ -67,7 +68,7 @@ class ScalableRankSpec extends AnyFunSuite {
 
   test("grouped prefix max equals the exclusive window max, nulls on group-first rows") {
     // values oscillate so the running max changes throughout; two groups,
-    // each spanning many of the 32 range slices, exercise the carry path;
+    // each spanning several of the 4 range slices, exercise the carry path;
     // negative values pin the Long.MinValue identity handling
     val df = (1 to 4000).map { i =>
       (if (i % 2 == 0) "a" else "b", i.toLong, ((i * 7919) % 997).toLong - 500L)
@@ -80,47 +81,6 @@ class ScalableRankSpec extends AnyFunSuite {
     assert(joined.count() == 4000)
     assert(joined.filter(not(col("pmax") <=> col("pmax2"))).count() == 0)
     assert(got.filter(col("pmax").isNull).count() == 2, "exactly one null per group")
-  }
-
-  test("rowsAtGlobalRanks returns exactly the window-ranked rows at each target") {
-    val df = sample(1000)
-    val (hit, total) = ScalableRank.rowsAtGlobalRanks(
-      df, Seq(col("v"), col("id")),
-      n => Seq(1L, n / 2, n, n + 7 /* out of range: dropped */), "rn")
-    assert(total == 1000L)
-    val want = df.withColumn("rn2",
-        row_number().over(Window.orderBy(col("v"), col("id"))).cast("bigint"))
-      .filter(col("rn2").isin(1L, 500L, 1000L))
-    assert(hit.count() == 3)
-    val joined = hit.join(want, Seq("id", "v"))
-    assert(joined.count() == 3)
-    assert(joined.filter(col("rn") =!= col("rn2")).count() == 0)
-  }
-
-  test("rowsAtGlobalRanks: heavy ties, constant key (fallback), string key (fallback)") {
-    // heavy ties: few distinct leading values → most ranks resolved by the
-    // tiebreak INSIDE one histogram bin
-    val rnd = new scala.util.Random(7)
-    val ties = (1 to 2000).map(i => (i.toLong, (rnd.nextInt(5) * 100).toLong))
-      .toDF("id", "v").repartition(7)
-    val (h1, t1) = ScalableRank.rowsAtGlobalRanks(
-      ties, Seq(col("v"), col("id")), n => Seq(1L, n / 3, n / 2, n), "rn")
-    val w1 = ties.withColumn("rn2",
-      row_number().over(Window.orderBy(col("v"), col("id"))).cast("bigint"))
-      .filter(col("rn2").isin(1L, 2000L / 3, 1000L, 2000L))
-    assert(h1.join(w1, Seq("id", "v")).filter(col("rn") =!= col("rn2")).count() == 0)
-    assert(h1.count() == 4 && t1 == 2000L)
-    // constant leading key: degenerate histogram → range fallback
-    val const = (1 to 500).map(i => (i.toLong, 42L)).toDF("id", "v")
-    val (h2, t2) = ScalableRank.rowsAtGlobalRanks(
-      const, Seq(col("v"), col("id")), n => Seq(n / 2), "rn")
-    assert(t2 == 500L && h2.select("id").head().getLong(0) == 250L)
-    // string leading key: lexical order must survive (fallback path)
-    val strs = Seq("9", "10", "85", "7", "100").zipWithIndex
-      .map { case (s, i) => (i.toLong, s) }.toDF("id", "v")
-    val (h3, _) = ScalableRank.rowsAtGlobalRanks(
-      strs, Seq(col("v"), col("id")), _ => Seq(1L), "rn")
-    assert(h3.select("v").head().getString(0) == "10") // lexically first
   }
 
   test("fuzz: grouped prefix sum/max equal the window forms on random shapes") {
